@@ -157,7 +157,7 @@ object Graft {
   }
 
   /** Free every memoized build (ANN indexes, signature/edge frames),
-    * unpersist their cached blocks, and drop the session's analyzed-scan
+    * release their stored blocks, and drop the session's analyzed-scan
     * cache (round-18, ADVICE-r17: scanCache was the one session cache
     * this didn't reach). A long-lived session should call this when done
     * with a fixture dir — the memo cannot free itself (see util.Memo's

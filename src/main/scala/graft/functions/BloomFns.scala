@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 /** SQL-registers Spark's INTERNAL Bloom-filter expressions — the exact
@@ -16,23 +15,17 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   */
 object BloomFns {
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(classOf[BloomFilterAggregate].getName,
-        "graft_bloom_agg"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c, est, bits) => new BloomFilterAggregate(c, est, bits)
-        case _ => throw new IllegalArgumentException(
-          "graft_bloom_agg(childHash, estimatedItems, numBits)")
-      })
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(classOf[BloomFilterMightContain].getName,
-        "graft_might_contain"),
-      (children: Seq[Expression]) => children match {
-        case Seq(bf, v) => BloomFilterMightContain(bf, v)
-        case _ => throw new IllegalArgumentException(
-          "graft_might_contain(bloom, valueHash)")
-      })
+    Builders.registerOnce(spark, "graft_bloom_agg",
+        classOf[BloomFilterAggregate]) {
+      case Seq(c, est, bits) => new BloomFilterAggregate(c, est, bits)
+      case _ => throw new IllegalArgumentException(
+        "graft_bloom_agg(childHash, estimatedItems, numBits)")
+    }
+    Builders.registerOnce(spark, "graft_might_contain",
+        classOf[BloomFilterMightContain]) {
+      case Seq(bf, v) => BloomFilterMightContain(bf, v)
+      case _ => throw new IllegalArgumentException(
+        "graft_might_contain(bloom, valueHash)")
+    }
   }
 }

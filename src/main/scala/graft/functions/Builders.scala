@@ -1,10 +1,24 @@
 package graft.functions
 
-import org.apache.spark.sql.AnalysisException
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Shared function-builder plumbing for the native expressions. */
 object Builders {
+
+  /** Register `name` in the session's function registry unless it is
+    * already there. Query builders call `register` on every build, and
+    * registering again would replace the function and log a "replaced a
+    * previously registered function" WARN each time. */
+  def registerOnce(spark: SparkSession, name: String, cls: Class[_])
+      (builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    val id = FunctionIdentifier(name)
+    if (!registry.functionExists(id))
+      registry.registerFunction(id, new ExpressionInfo(cls.getName, name),
+        builder)
+  }
 
   /** Unary-expression builder with the proper WRONG_NUM_ARGS analysis
     * error — see arity2's rationale. */

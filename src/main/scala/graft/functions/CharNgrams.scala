@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
@@ -94,8 +93,6 @@ object CharNgrams {
 
   /** Idempotently registers `char_ngrams_native(text, n)` on the session. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("char_ngrams_native"),
-      new ExpressionInfo(classOf[CharNgrams].getName, "char_ngrams_native"),
+    Builders.registerOnce(spark, "char_ngrams_native", classOf[CharNgrams])(
       Builders.arity2("char_ngrams_native")(CharNgrams(_, _)))
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -131,8 +130,6 @@ case class CosineSim(left: Expression, right: Expression)
 object CosineSim {
   /** Idempotently registers `cosine_native(a, b)` on the live session. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("cosine_native"),
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_native"),
+    Builders.registerOnce(spark, "cosine_native", classOf[CosineSim])(
       Builders.arity2("cosine_native")(CosineSim(_, _)))
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -94,8 +93,6 @@ object DotProduct {
     * query builders can use it via expr() without session-construction
     * hooks (the driver owns SparkSession creation). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("dot_native"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_native"),
+    Builders.registerOnce(spark, "dot_native", classOf[DotProduct])(
       Builders.arity2("dot_native")(DotProduct(_, _)))
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
@@ -86,8 +85,6 @@ object HammingSign {
   /** Idempotently registers `hamming_sign_native(a, b)` — same pattern
     * as DotProduct.register. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("hamming_sign_native"),
-      new ExpressionInfo(classOf[HammingSign].getName, "hamming_sign_native"),
+    Builders.registerOnce(spark, "hamming_sign_native", classOf[HammingSign])(
       Builders.arity2("hamming_sign_native")(HammingSign(_, _)))
 }

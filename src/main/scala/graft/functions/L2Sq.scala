@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -89,8 +88,6 @@ object L2Sq {
   /** Idempotently registers `l2sq_native(a, b)` on the live session —
     * same pattern as DotProduct.register. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("l2sq_native"),
-      new ExpressionInfo(classOf[L2Sq].getName, "l2sq_native"),
+    Builders.registerOnce(spark, "l2sq_native", classOf[L2Sq])(
       Builders.arity2("l2sq_native")(L2Sq(_, _)))
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -73,8 +72,6 @@ object Md5Prefix64 {
 
   /** Idempotently registers `md5_prefix64_native(s)` on the session. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("md5_prefix64_native"),
-      new ExpressionInfo(classOf[Md5Prefix64].getName, "md5_prefix64_native"),
+    Builders.registerOnce(spark, "md5_prefix64_native", classOf[Md5Prefix64])(
       Builders.arity1("md5_prefix64_native")(Md5Prefix64(_)))
 }

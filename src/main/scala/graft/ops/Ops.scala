@@ -161,7 +161,7 @@ object Ops {
 
   /** `tokenChunks` over a PRE-TOKENIZED array column — the shared-tokenize
     * path (round-6): the text tier derives every chunk plan from its one
-    * persisted token frame instead of re-splitting per query. Chunk
+    * memoized token frame instead of re-splitting per query. Chunk
     * semantics are identical by construction (the text variant delegates
     * here after one split). */
   def tokenChunksArr(df: DataFrame, id: Column, toksCol: Column,
@@ -324,7 +324,7 @@ object Ops {
 
   /** Band keys from an ALREADY-COMPUTED signature frame (one row per id
     * with `graft_h*` columns — `minhashSignatures` output, possibly
-    * persisted/memoized by the caller). The ONE band-key construction:
+    * memoized by the caller). The ONE band-key construction:
     * md5 over the '|'-joined hashes of each band's rows. */
   def minhashBandsFromSig(sig: DataFrame, numHashes: Int,
       bands: Int): DataFrame = {
@@ -374,7 +374,7 @@ object Ops {
       numHashes, bands)
 
   /** Distinct candidate pairs (id1 < id2) from a band-key frame — the
-    * banded EQUI-join, factored out so callers that persist the band (or
+    * banded EQUI-join, factored out so callers that memoize the band (or
     * signature) frame don't pay the signature aggregation once per join
     * side (the plan-reuse note on `minhashCandidatePairs`). */
   def candidatePairsFromBands(b: DataFrame): DataFrame = {
@@ -394,9 +394,9 @@ object Ops {
     *
     * Plan note: the self-join references the signature subtree twice and
     * Catalyst has no automatic reuse, so the tokenize→minhash aggregation
-    * computes twice per call. At corpus scale, persist/Memo the bands at
-    * the call site (this generic API has no cache key of its own and a
-    * silent internal persist() would leak across invocations). */
+    * computes twice per call. At corpus scale, `Memo.frame` the bands at
+    * the call site (this generic API has no cache key of its own, and a
+    * silent internal cache would leak across invocations). */
   def minhashCandidatePairs(df: DataFrame, id: Column, textCol: Column,
       numHashes: Int = 8, bands: Int = 2): DataFrame =
     minhashCandidatePairsArr(df, id, split(textCol, " ", -1),
@@ -582,7 +582,7 @@ object Ops {
   // constants (k=8, M=4, 16-dim subspaces, 16 seeds) are parameters here.
   // Seeding stays deterministic-by-construction (`id < k` / `id <
   // numSeeds`) so results are engine-reproducible; a production caller
-  // seeds from a sampled + persisted frame instead — same plan shape.
+  // seeds from a sampled + memoized frame instead — same plan shape.
 
   /** One distributed Lloyd (k-means) refinement step over `vec` with `k`
     * centroids seeded from `id < k`: broadcast centroid table, per-vector
@@ -636,10 +636,10 @@ object Ops {
     // path (empty cells keep the old codeword). Float means are
     // partition-order-dependent, so fitted codebooks are for the
     // MEASUREMENT path (VecBench) only — graded oracle queries stay at
-    // fitIters=0 (seeded, deterministic). Memoized + persisted: tiny
+    // fitIters=0 (seeded, deterministic). Memoized: tiny
     // (m·numSeeds rows) but each step re-walks an assignment scan.
     val seeds = if (fitIters == 0) seeds0
-    else graft.util.Memo(df.sparkSession,
+    else graft.util.Memo.frame(df.sparkSession,
         s"pq-codebook:${indexKey(df, id, vec)}:" +
           s"$m:$subDim:$numSeeds:$fitIters") {
       (0 until fitIters).foldLeft(seeds0) { (cb, _) =>
@@ -663,7 +663,7 @@ object Ops {
             cb("ssub") === col("usub") && cb("seed") === col("useed"), "left")
           .select(cb("ssub"), cb("seed"),
             coalesce(col("ncw"), cb("cw")).as("cw"))
-      }.persist()
+      }
     }
     // The completeness guards ride on the MAIN path, not the seed frame:
     // an assertion attached to seeds rows never evaluates when the
@@ -733,14 +733,14 @@ object Ops {
     val v = df.select(id.as("vec_id"), graft.util.V.dbl(vec).as("e"))
     val cent = v.filter(col("vec_id") < k)
       .select(col("vec_id").as("cid"), col("e").as("c"))
-    // assignment memoized + persisted (vec_id, cid — 2 longs/row): the
+    // assignment memoized (vec_id, cid — 2 longs/row): the
     // plan references it from BOTH self-join sides and the census agg,
     // and without caching Spark recomputes the n×k argmin per reference
     // (the round-8 plan sweep measured 16 corpus scans here). The vector
     // payloads deliberately stay OUT of the cache — the self-join re-reads
     // them from the columnar source, which at 100 TB is cheaper than
     // pinning n·d doubles in executor memory.
-    val assigned = graft.util.Memo(df.sparkSession,
+    val assigned = graft.util.Memo.frame(df.sparkSession,
         s"semdedup-assign:${indexKey(df, id, vec)}:$k") {
       val w = Window.partitionBy("vec_id").orderBy(col("d2"), col("cid"))
       v.crossJoin(broadcast(cent))
@@ -748,7 +748,6 @@ object Ops {
         .withColumn("graft_rn", row_number().over(w))
         .filter(col("graft_rn") === 1)
         .select("vec_id", "cid")
-        .persist()
     }
     val members = assigned.join(v, Seq("vec_id"))
     val l = members.select(col("cid").as("c1"), col("vec_id").as("v1"),
@@ -767,7 +766,7 @@ object Ops {
         (col("n_members") - col("n_dups")).as("n_survivors"))
   }
 
-  /** Memoized, PERSISTED PQ codes for EVERY vector — the
+  /** Memoized, STORED PQ codes for EVERY vector — the
     * query-independent "index build" of the PQ family, shared by
     * `pqAdcTopK` and `ivfPqRerank` (same memo key): built once per
     * (session, corpus plan, params), reused by every query and bench rep.
@@ -776,11 +775,11 @@ object Ops {
     * cached local file and an 18× corpus re-read at 100 TB. Keying by the
     * ANALYZED plan's semanticHash ties the entry to the exact input
     * relation (different sfDir ⇒ different scan ⇒ different hash);
-    * `Graft.freeCaches` disposes. n·m rows persisted — the materialized
+    * `Graft.freeCaches` disposes. n·m rows stored — the materialized
     * signature table a production index build writes anyway. */
   def pqCodesAll(df: DataFrame, id: Column, vec: Column,
       m: Int, subDim: Int, numSeeds: Int, fitIters: Int = 0): DataFrame =
-    graft.util.Memo(df.sparkSession,
+    graft.util.Memo.frame(df.sparkSession,
         s"pqcodes:${indexKey(df, id, vec)}:" +
           s"$m:$subDim:$numSeeds:$fitIters") {
       val w = Window.partitionBy("vec_id", "sub")
@@ -789,7 +788,6 @@ object Ops {
         .withColumn("graft_rn", row_number().over(w))
         .filter(col("graft_rn") === 1)
         .select(col("vec_id"), col("sub"), col("seed").as("code"))
-        .persist()
     }
 
   /** PQ search via asymmetric distance computation: the query's
@@ -885,10 +883,10 @@ object Ops {
     // graded oracle queries stay at fitIters=0 (seeded, deterministic).
     // Distributed shape per step: one broadcast-join assignment scan +
     // one (sub, seed, pos) hash agg — m·numSeeds·subDim cells of state.
-    // The codebook is memoized + persisted: tiny (m·numSeeds rows), but
+    // The codebook is memoized: tiny (m·numSeeds rows), but
     // deriving it re-walks the assignment subtree, and BOTH the encode
     // and every per-probe LUT reference it.
-    val seeds = graft.util.Memo(df.sparkSession,
+    val seeds = graft.util.Memo.frame(df.sparkSession,
         s"respq-codebook:${indexKey(df, id, vec)}:" +
           s"$kCent:$m:$subDim:$numSeeds:$fitIters") {
       // Seed-completeness guard (ADVICE r8): totality of `assigned` does
@@ -923,14 +921,14 @@ object Ops {
             cb("ssub") === col("usub") && cb("seed") === col("useed"), "left")
           .select(cb("ssub"), cb("seed"),
             coalesce(col("ncw"), cb("cw")).as("cw"))
-      }.persist()
+      }
     }
     // encode: per (vector, subspace) the nearest residual codeword.
-    // Memoized + persisted like pqCodesAll — the query-independent index
+    // Memoized like pqCodesAll — the query-independent index
     // build (assignment + residuals + codebook + encode); without it the
     // plan re-evaluated this subtree per reference (18 corpus scans at
     // sf0.001 — an 18× corpus re-read at 100 TB).
-    val codes = graft.util.Memo(df.sparkSession,
+    val codes = graft.util.Memo.frame(df.sparkSession,
         s"respq-codes:${indexKey(df, id, vec)}:" +
           s"$kCent:$m:$subDim:$numSeeds:$fitIters") {
       val wb = Window.partitionBy("vec_id", "sub")
@@ -942,7 +940,6 @@ object Ops {
         .filter(col("graft_rn") === 1)
         .select(col("vec_id"), col("cid"), col("sub"),
           col("seed").as("code"))
-        .persist()
     }
     // probe set: the query's nProbes nearest centroids
     val wp = Window.orderBy(col("qd2"), col("cid"))
@@ -1012,9 +1009,9 @@ object Ops {
       .filter(col("graft_rn") <= nProbes)
       .select("cid")
     // assignment: every vector to its nearest centroid (argmin window) —
-    // memoized + persisted: the one full-corpus pass of the query path,
+    // memoized: the one full-corpus pass of the query path,
     // query-independent, shared across calls (n×2 longs cached)
-    val assigned = graft.util.Memo(df.sparkSession,
+    val assigned = graft.util.Memo.frame(df.sparkSession,
         s"ivfassign:${indexKey(df, id, vec)}:$kCent") {
       val wa = Window.partitionBy("vec_id").orderBy(col("d2"), col("cid"))
       v.crossJoin(broadcast(cent))
@@ -1022,7 +1019,6 @@ object Ops {
         .withColumn("graft_rn", row_number().over(wa))
         .filter(col("graft_rn") === 1)
         .select("vec_id", "cid")
-        .persist()
     }
     val cand = assigned.join(broadcast(probes), Seq("cid"), "semi")
       .filter(col("vec_id") =!= lit(queryId))
@@ -1030,7 +1026,7 @@ object Ops {
     // PQ-ADC coarse rank over the candidates only. Codes come from the
     // MEMOIZED full-corpus frame (pqCodesAll — same entry pqAdcTopK uses,
     // codebook probe-independent by construction); restricting to
-    // candidates is a semi-join against the persisted frame, not a
+    // candidates is a semi-join against the stored frame, not a
     // re-encode.
     val codes = pqCodesAll(df, id, vec, m, subDim, numSeeds)
       .join(broadcast(cand), Seq("vec_id"), "semi")
@@ -1196,43 +1192,34 @@ object Ops {
     * deep components may still be provisional, a state the caller (and
     * the graded oracle, which computes the true fixpoint) can see.
     *
-    * Every round's frontier is MATERIALIZED TO A PERSISTED ROW-RDD and
-    * re-wrapped as a DataFrame, which severs the iteration's plan
-    * lineage — load-bearing twice over. (1) Freeing the previous round
-    * cannot invalidate the current one: `Dataset.unpersist` goes through
-    * the CacheManager, which RE-CACHES (= clears the buffers of) every
-    * cached plan referencing the unpersisted relation, so the naive
-    * persist-then-unpersist-the-parent loop silently recomputes the
-    * ENTIRE iteration chain on every subsequent action (measured at
-    * sf0.1: 36 s cold / 4 s per warm read before the rework, 0.1 s warm
-    * after). RDD-level unpersist touches no CacheManager state. (2) The
-    * plan stays O(1) per round instead of growing with the iteration
-    * count. The loop holds at most two materialized frontiers, each
-    * released deterministically (never left to the async ContextCleaner,
-    * which is why this is not `localCheckpoint` — its blocks are
-    * unreachable from Dataset.unpersist). The RETURNED frame is a
-    * CacheManager-registered persist over the final frontier, so the
-    * caller's memo can dispose it with the default Dataset disposer.
+    * Every round's frontier is stored as a lineage-free checkpoint
+    * (`Memo.checkpoint`), which severs the iteration's plan lineage —
+    * load-bearing twice over. (1) Freeing the previous round cannot
+    * invalidate the current one. The naive loop would persist each round
+    * and `Dataset.unpersist` the parent, but that goes through the
+    * CacheManager, which RE-CACHES (= clears the buffers of) every cached
+    * plan referencing the unpersisted relation, so every later action
+    * silently recomputes the ENTIRE iteration chain (measured at sf0.1:
+    * 36 s cold / 4 s per warm read before the rework, 0.1 s warm after).
+    * `Memo.release` frees the checkpoint's RDD directly and touches no
+    * CacheManager state. (2) The plan stays O(1) per round instead of
+    * growing with the iteration count. The loop holds at most two stored
+    * frontiers, each released deterministically (never left to the async
+    * ContextCleaner). The RETURNED frame is itself a checkpoint over the
+    * final frontier, so a caller memoizes it with `Memo.frame` (which
+    * stores it as is and releases it on evict).
     *
     * 100-TB shape: rounds ∝ component diameter (near-dup clusters are
     * shallow — typically ≤ 3), each round two shuffles keyed on node id;
-    * the changed-count scans the just-materialized frontier. Frontier
-    * blocks are MEMORY_AND_DISK and remain lineage-recomputable under
-    * eviction; a long production run would swap the materialize step for
-    * reliable `checkpoint()` to survive executor loss — the loop
-    * structure is identical. */
+    * the changed-count scans the just-stored frontier. Frontier blocks are
+    * MEMORY_AND_DISK but, as local checkpoints, not recomputable after
+    * executor loss; a long production run would swap in reliable
+    * `checkpoint()` — the loop structure is identical. */
   def ccFixpoint(nodes: DataFrame, id: Column, edges: DataFrame,
       src: Column, dst: Column, maxRounds: Int = 20): DataFrame = {
-    val spark = nodes.sparkSession
-    def materialize(df: DataFrame)
-        : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-      val rdd = df.rdd.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      rdd.count()
-      (spark.createDataFrame(rdd, df.schema), rdd)
-    }
-    var (labels, lrdd) =
-      materialize(nodes.select(id.as("graft_id"), id.as("graft_lbl")))
+    import graft.util.Memo
+    var labels =
+      Memo.checkpoint(nodes.select(id.as("graft_id"), id.as("graft_lbl")))
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
@@ -1243,35 +1230,32 @@ object Ops {
           dst === col("graft_nid"))
         .groupBy(src.as("graft_src"))
         .agg(min(col("graft_nlbl")).as("graft_mn"))
-      val (next, nrdd) = materialize(labels
+      val next = Memo.checkpoint(labels
         .join(neigh, col("graft_id") === col("graft_src"), "left")
         .select(col("graft_id"), col("graft_lbl").as("graft_prev"),
           when(col("graft_mn").isNull || col("graft_lbl") < col("graft_mn"),
             col("graft_lbl")).otherwise(col("graft_mn")).as("graft_lbl")))
       val changed =
         next.filter(col("graft_lbl") =!= col("graft_prev")).count()
-      lrdd.unpersist(false)
-      lrdd = nrdd
-      labels = next.select("graft_id", "graft_lbl")
+      Memo.release(labels)
+      labels = next
       converged = changed == 0L
     }
-    val out = labels.select(col("graft_id").as("id"),
-      col("graft_lbl").as("cluster"), lit(converged).as("converged"))
-      .persist()
-    out.count()
-    lrdd.unpersist(false)
+    val out = Memo.checkpoint(labels.select(col("graft_id").as("id"),
+      col("graft_lbl").as("cluster"), lit(converged).as("converged")))
+    Memo.release(labels)
     out
   }
 
   /** Corpus-global symmetric int8 codes (round-9): scale s = max |x|
     * over the corpus, per-vector codes round(x/s·127) carried as exact
     * small-integer doubles (every value and partial dot binary-exact;
-    * see vec_int8_dot_topk). Memoized + persisted per (plan, id/vec
+    * see vec_int8_dot_topk). Memoized per (plan, id/vec
     * exprs) like the PQ index frames — the build-once/query-many shape:
     * serving N queries re-reads the coded frame, never re-codes the
     * corpus. Returns (vec_id, e double[], q double[]). */
   def int8Codes(df: DataFrame, id: Column, vec: Column): DataFrame =
-    graft.util.Memo(df.sparkSession,
+    graft.util.Memo.frame(df.sparkSession,
         s"int8codes:${indexKey(df, id, vec)}") {
       import graft.util.V
       val base = df.select(id.as("vec_id"), V.dbl(vec).as("e"))
@@ -1282,6 +1266,5 @@ object Ops {
         .select(col("vec_id"), col("e"),
           transform(col("e"), x =>
             round(x / col("graft_s") * lit(127.0), 0)).as("q"))
-        .persist()
     }
 }

@@ -110,30 +110,33 @@ object Approx {
 
   // ---- memoized index builds ------------------------------------------
   // util.Memo keys on the session object itself (two sessions can never
-  // collide the way an identityHashCode string key could); persisted
+  // collide the way an identityHashCode string key could); checkpointed
   // index frames are freed explicitly via Memo.clear / Graft.freeCaches —
   // see util.Memo's scaladoc for why weak keys alone cannot reclaim them
 
   // `tables`: the fixture tables the build reads — their (size, mtime)
   // footprint rides in the key so an in-place fixture regeneration misses
   // the cache (round-11, VERDICT-r10 #5; Ops.indexKey's guard generalized)
+  private def memoKey(sfDir: String, what: String, tables: String*) =
+    s"$sfDir:$what:${Tables.tableKey(sfDir, tables: _*)}"
+
+  /** A non-frame memo (fitted model, eval artifact) under `memoKey`. */
   private def memo[T <: AnyRef](spark: SparkSession, sfDir: String,
       what: String, tables: String*)(build: => T): T =
-    graft.util.Memo(spark,
-      s"$sfDir:$what:${Tables.tableKey(sfDir, tables: _*)}")(build)
+    graft.util.Memo(spark, memoKey(sfDir, what, tables: _*))(build)
 
   /** L2-normalized embeddings as MLlib vectors — shared input of both ANN
-    * indexes. Persisted: the build phase reads it several times (fit,
+    * indexes. Memoized: the build phase reads it several times (fit,
     * assignment, query fetch) and the query phase scans it per call. */
   private def normalizedVecs(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "vecs", "embeddings") {
+    graft.util.Memo.frame(spark, memoKey(sfDir, "vecs", "embeddings")) {
       val raw = Tables.embeddings(spark, sfDir)
         .select(col("vec_id"),
           org.apache.spark.ml.functions.array_to_vector(
             transform(col("embedding"), x => x.cast("double"))).as("raw"))
       new org.apache.spark.ml.feature.Normalizer()
         .setInputCol("raw").setOutputCol("v").setP(2.0)
-        .transform(raw).select("vec_id", "v").persist()
+        .transform(raw).select("vec_id", "v")
     }
 
   /** Memoized ANN-recall evaluation artifact: the exact cosine top-10 of
@@ -191,21 +194,23 @@ object Approx {
       LshIndex(model, qv)
     }
 
+  private final case class IvfQuantizer(
+    model: KMeansModel, qv: Vector, probes: Seq[Int])
   private[graft] final case class IvfIndex(
-    model: KMeansModel, assigned: DataFrame, qv: Vector, probes: Seq[Int])
+    assigned: DataFrame, qv: Vector, probes: Seq[Int])
 
   /** IVF coarse quantizer + inverted file, parameterized on cell count
     * and probe fan-out (round-5 verdict #4 — the graded vec_ann_ivf is
     * the (8, 3) instantiation; Round6OpsSpec pins a second point, where
-    * probing ALL cells must recover exact-scan recall). Memo key carries
-    * the parameters so differently-shaped indexes coexist per session. */
+    * probing ALL cells must recover exact-scan recall). Memo keys carry
+    * the parameters so differently-shaped indexes coexist per session:
+    * the fitted quantizer is a plain memo, the inverted file (every
+    * vector's cell) a memoized frame. */
   private[graft] def ivfIndex(spark: SparkSession, sfDir: String,
-      nCells: Int = 8, nProbes: Int = 3): IvfIndex =
-    // withDispose: the index value is not itself a DataFrame, so the memo's
-    // default unpersist-on-evict can't see the persisted `assigned` frame
-    graft.util.Memo.withDispose(spark,
-        s"$sfDir:ivf:$nCells:$nProbes:${Tables.tableKey(sfDir, "embeddings")}") {
-      val vecs = normalizedVecs(spark, sfDir)
+      nCells: Int = 8, nProbes: Int = 3): IvfIndex = {
+    val key = memoKey(sfDir, s"ivf:$nCells:$nProbes", "embeddings")
+    val vecs = normalizedVecs(spark, sfDir)
+    val quant = graft.util.Memo(spark, key) {
       // Coarse quantizer only — 3 Lloyd iterations give stable-enough
       // cells for an inverted file (recall pinned by AnnRecallSpec) at a
       // fraction of full-convergence fit time. Fit on a deterministic
@@ -215,9 +220,7 @@ object Approx {
         .setK(nCells).setMaxIter(3).setSeed(42L)
         .setFeaturesCol("v").setPredictionCol("cell")
       val model = km.fit(vecs.filter(col("vec_id") % 4 === 0))
-      val assigned =
-        model.transform(vecs).select("vec_id", "v", "cell").persist()
-      val qv = assigned.filter(col("vec_id") === 0).head().getAs[Vector]("v")
+      val qv = vecs.filter(col("vec_id") === 0).head().getAs[Vector]("v")
       val probes = model.clusterCenters.zipWithIndex
         .map { case (c, i) =>
           var d = 0.0; var j = 0
@@ -225,8 +228,13 @@ object Approx {
           (i, d)
         }
         .sortBy(_._2).take(nProbes).map(_._1).toSeq
-      IvfIndex(model, assigned, qv, probes)
-    }(idx => idx.assigned.unpersist(false))
+      IvfQuantizer(model, qv, probes)
+    }
+    val assigned = graft.util.Memo.frame(spark, s"$key:assigned") {
+      quant.model.transform(vecs).select("vec_id", "v", "cell")
+    }
+    IvfIndex(assigned, quant.qv, quant.probes)
+  }
 
   /** Parameterized IVF ANN query (vec_ann_ivf = the (8, 3, 10) point):
     * probe the query's `nProbes` nearest of `nCells` cells, exact cosine
@@ -275,13 +283,14 @@ object Approx {
       // all-pairs scan — remains the 100-TB shape being exercised; the
       // exact side is the same capped doc_id < 50 slice as
       // text_jaccard_pairs.
-      val vecs = memo(spark, sfDir, "minhash-vecs", "documents") {
+      val vecs = graft.util.Memo.frame(spark,
+          memoKey(sfDir, "minhash-vecs", "documents")) {
         val docs = TextOps.docToks(spark, sfDir)
           .filter(col("doc_id") < 50)
           .select(col("doc_id"), col("tk").as("tokens"))
         val tf = new HashingTF().setInputCol("tokens").setOutputCol("features")
           .setNumFeatures(1 << 18).setBinary(true)
-        tf.transform(docs).select("doc_id", "features").persist()
+        tf.transform(docs).select("doc_id", "features")
       }
       val model = memo[MinHashLSHModel](spark, sfDir, "minhash-model", "documents") {
         new MinHashLSH().setInputCol("features").setOutputCol("hashes")

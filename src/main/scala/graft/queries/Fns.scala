@@ -518,6 +518,13 @@ object Fns {
           FROM z GROUP BY 1 ORDER BY zbucket"""
     })
 
+  /** The z-ordered layout's dir under the sink root, md5-keyed per sfDir
+    * (ADVICE r12: a 32-bit hashCode collision between two sfDirs would
+    * overwrite each other's layout while each session's Memo flag says
+    * "built", serving rows from the wrong scale factor). */
+  private[graft] def zorderDir(sfDir: String): String =
+    s"${Sinks.root}/orders_zorder_${Sinks.sfTag(sfDir)}"
+
   /** Write orders into the z-ordered layout once per (session, sfDir):
     * one file per 6-bit z-bucket directory (`repartition(zb)` routes each
     * bucket to one task; `partitionBy(zb)` gives it its own directory) —
@@ -525,12 +532,7 @@ object Fns {
     * reads back. Memoized like the sink tier (build once, audit many). */
   private def writeOrdersZordered(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): String = {
-    // md5-keyed dir (ADVICE r12: a 32-bit hashCode collision between two
-    // sfDirs would overwrite each other's layout while each session's
-    // Memo flag says "built", serving rows from the wrong scale factor)
-    val dir = "/tmp/graft_sink/orders_zorder_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+    val dir = zorderDir(sfDir)
     graft.util.Memo(spark,
       s"$sfDir:sink_orders_zorder:${Tables.tableKey(sfDir, "orders")}") {
       Tables.orders(spark, sfDir)

@@ -1008,7 +1008,7 @@ object MlPrep {
     * straightforward per-instance spelling. */
   private def bpeVocabEncoded(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): org.apache.spark.sql.DataFrame =
-    // Memoized + persisted per (session, corpus) since round 18: THREE
+    // Memoized per (session, corpus) since round 18: THREE
     // keys consume this frame (ml_bpe_encode, ml_bpe_vocab,
     // ml_tokenizer_fertility) and each was re-running the ~128-chained-
     // replace encode over every distinct token (the suite's single most
@@ -1018,7 +1018,7 @@ object MlPrep {
     // materialized "encoded vocabulary" table a production tokenizer
     // pipeline writes once and joins everywhere. The frame is
     // vocabulary-sized (distinct tokens), not corpus-sized.
-    graft.util.Memo(spark,
+    graft.util.Memo.frame(spark,
         s"$sfDir:bpevocabenc:${Tables.tableKey(sfDir, "documents")}") {
       graft.queries.TextOps.docToks(spark, sfDir)
         .select(explode(col("tk")).as("tok"))
@@ -1026,7 +1026,6 @@ object MlPrep {
         .distinct()
         .select(col("tok"), length(col("tok")).cast("bigint").as("nc"),
           split(trim(bpeEncodeExpr), " ").as("syms"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   val mlBpeEncode = Q(

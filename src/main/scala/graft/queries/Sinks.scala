@@ -27,7 +27,15 @@ import graft.util.Tables
   */
 object Sinks {
 
-  /** Collision-resistant per-sfDir tag for /tmp sink dirs (ADVICE r12:
+  /** Root of every sink artifact (this tier's layouts and Fns' z-ordered
+    * one): `graft_sink` under `java.io.tmpdir`, so a JVM started with its
+    * own temp dir keeps its artifacts there. The name is fixed because
+    * `Streaming.sweepStaleTmp` skips exactly `graft_sink`. */
+  private[graft] def root: String =
+    new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
+      "graft_sink").getPath
+
+  /** Collision-resistant per-sfDir tag for sink dirs (ADVICE r12:
     * two sfDirs colliding in 32-bit String.hashCode within one process
     * would overwrite each other's layout while each session's Memo flag
     * says "built" — md5 makes that class impossible). */
@@ -38,10 +46,10 @@ object Sinks {
     java.security.MessageDigest.getInstance("MD5")
       .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
 
-  /** Deterministic per-sfDir output dir under /tmp (namespaced so two
+  /** Deterministic per-sfDir output dir under `root` (namespaced so two
     * fixture dirs can't collide). */
-  private def sinkDir(sfDir: String): String =
-    s"/tmp/graft_sink/orders_month_${sfTag(sfDir)}"
+  private[graft] def sinkDir(sfDir: String): String =
+    s"$root/orders_month_${sfTag(sfDir)}"
 
   /** Write orders partitioned by month, once per (session, sfDir);
     * returns the written dir. Shared by the manifest and the pruned-read
@@ -117,14 +125,14 @@ object Sinks {
           .select("o_orderkey", "o_orderpriority")
           .write.mode("overwrite")
           .format("parquet")
-          .option("path", s"/tmp/graft_sink/orders_b_$tag")
+          .option("path", s"$root/orders_b_$tag")
           .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
           .saveAsTable(s"graft_orders_b_$tag")
         Tables.lineitem(spark, sfDir)
           .select("l_orderkey", "l_extendedprice", "l_discount")
           .write.mode("overwrite")
           .format("parquet")
-          .option("path", s"/tmp/graft_sink/lineitem_b_$tag")
+          .option("path", s"$root/lineitem_b_$tag")
           .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
           .saveAsTable(s"graft_lineitem_b_$tag")
         java.lang.Boolean.TRUE
@@ -163,7 +171,7 @@ object Sinks {
   val sinkCsvRoundtrip = Q(
     "sink_csv_roundtrip",
     (spark, sfDir) => {
-      val dir = s"/tmp/graft_sink/docs_csv_${sfTag(sfDir)}"
+      val dir = s"$root/docs_csv_${sfTag(sfDir)}"
       graft.util.Memo(spark,
         s"$sfDir:csv_roundtrip:${Tables.tableKey(sfDir, "documents")}") {
         Tables.documents(spark, sfDir)
@@ -196,7 +204,7 @@ object Sinks {
   val sinkJsonlRoundtrip = Q(
     "sink_jsonl_roundtrip",
     (spark, sfDir) => {
-      val dir = s"/tmp/graft_sink/docs_jsonl_${sfTag(sfDir)}"
+      val dir = s"$root/docs_jsonl_${sfTag(sfDir)}"
       graft.util.Memo(spark,
         s"$sfDir:jsonl_roundtrip:${Tables.tableKey(sfDir, "documents")}") {
         Tables.documents(spark, sfDir)
@@ -234,7 +242,7 @@ object Sinks {
   val sinkOrcRoundtrip = Q(
     "sink_orc_roundtrip",
     (spark, sfDir) => {
-      val dir = s"/tmp/graft_sink/docs_orc_${sfTag(sfDir)}"
+      val dir = s"$root/docs_orc_${sfTag(sfDir)}"
       graft.util.Memo(spark,
         s"$sfDir:orc_roundtrip:${Tables.tableKey(sfDir, "documents")}") {
         Tables.documents(spark, sfDir)
@@ -307,7 +315,7 @@ object Sinks {
     * demonstrated here is what that catalog entry replays. */
   private def writeTwoGenerations(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): String = {
-    val dir = s"/tmp/graft_sink/orders_evo_${sfTag(sfDir)}"
+    val dir = s"$root/orders_evo_${sfTag(sfDir)}"
     graft.util.Memo(spark,
       s"$sfDir:sink_orders_evo:${Tables.tableKey(sfDir, "orders")}") {
       val o = Tables.orders(spark, sfDir)
@@ -361,7 +369,7 @@ object Sinks {
     "sink_corrupt_record_audit",
     (spark, sfDir) => {
       import org.apache.spark.sql.types._
-      val dir = s"/tmp/graft_sink/corrupt_csv_${sfTag(sfDir)}"
+      val dir = s"$root/corrupt_csv_${sfTag(sfDir)}"
       graft.util.Memo(spark,
         s"$sfDir:corrupt_csv:${Tables.tableKey(sfDir, "documents")}") {
         Tables.documents(spark, sfDir).filter(col("doc_id") < 100)

@@ -37,9 +37,9 @@ object Streaming {
     * registered here and reclaimed by ONE shutdown hook for the whole
     * family (VERDICT-r15 #5 / ADVICE-r15: every cold build leaked its
     * dirs — 259 `graft_stream_*` orphans measured in /tmp before this).
-    * Deletion must wait for JVM exit, NOT memo eviction: the graded
-    * frame READS the sink files (an unpersisted memoized frame
-    * recomputes from them), so they must outlive every use of the
+    * Deletion must wait for JVM exit, NOT memo eviction: the state-source
+    * keys read the checkpoint dirs that memoized builds return (see
+    * `stateReaderBase`), so they must outlive every use of the
     * session. */
   private val tmpDirs =
     new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]
@@ -158,24 +158,38 @@ object Streaming {
     * only the last exiting build restores. All concurrent builds in one
     * process target the same (spark, sfDir), so a single shared slot is
     * sufficient; a hypothetical second sfDir simply rides the first's
-    * target for the overlap — a sizing nuance, never a correctness one. */
+    * target for the overlap — a sizing nuance, never a correctness one.
+    *
+    * The same scope selects the FileSystem-based checkpoint file manager.
+    * Spark's default (FileContext-based) manager checks link status for
+    * every checkpoint and state file, and without native Hadoop libraries
+    * each check forks a `readlink` process: a JFR recording of one
+    * `ingest` benchmark run counted 1392 `readlink` starts among 2037
+    * process starts. The FileSystem manager does the same renames
+    * without them. */
   private val confLock = new Object
   private var confDepth = 0
-  private var confPrev: String = null
+  private var confPrev: Map[String, Option[String]] = Map.empty
   private def withStreamConf[T](spark: org.apache.spark.sql.SparkSession,
       sfDir: String)(f: => T): T = {
-    val target = streamPartitions(spark, sfDir).toString
+    val target = Map(
+      "spark.sql.shuffle.partitions" -> streamPartitions(spark, sfDir).toString,
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        ("org.apache.spark.sql.execution.streaming.checkpointing." +
+          "FileSystemBasedCheckpointFileManager"))
     confLock.synchronized {
       if (confDepth == 0) {
-        confPrev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", target)
+        confPrev = target.keys.map(k => k -> spark.conf.getOption(k)).toMap
+        target.foreach { case (k, v) => spark.conf.set(k, v) }
       }
       confDepth += 1
     }
     try f finally confLock.synchronized {
       confDepth -= 1
-      if (confDepth == 0)
-        spark.conf.set("spark.sql.shuffle.partitions", confPrev)
+      if (confDepth == 0) confPrev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
     }
   }
 
@@ -227,7 +241,7 @@ object Streaming {
   /** Streaming tumbling 1h aggregation graded against the BATCH oracle. */
   val streamTumblingParity = Q(
     "stream_tumbling_parity",
-    (spark, sfDir) => graft.util.Memo(spark,
+    (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamtumbling:${Tables.tableKey(sfDir, "events")}") {
       withStreamConf(spark, sfDir) {
       val path = s"$sfDir/events.parquet"
@@ -257,12 +271,10 @@ object Streaming {
       val out = spark.table(name)
         .select(D.ntz(col("window.start")).as("bucket"), col("event_type"),
           col("n"), col("sum_value"))
-      // materialize OFF the memory sink: the graded frame must not read a
-      // sink another start() could touch; rows are calendar×types-sized
-      val rows = out.collect()
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // Memo.frame's eager checkpoint copies the rows OFF the memory sink
+      // right here: the graded frame must not read a sink another start()
+      // could touch; rows are calendar×types-sized
+      out
       }
     }.orderBy("bucket", "event_type"),
     // ts_tumbling's oracle VERBATIM — the entire point: the streaming
@@ -291,7 +303,7 @@ object Streaming {
     * scans. */
   val streamFileSinkParity = Q(
     "stream_file_sink_parity",
-    (spark, sfDir) => graft.util.Memo(spark,
+    (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamfilesink:${Tables.tableKey(sfDir, "events")}") {
       withStreamConf(spark, sfDir) {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -316,7 +328,6 @@ object Streaming {
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       spark.read.parquet(s"$base/out")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       }
     }.orderBy("bucket", "event_type"),
     // batch aggregate + the append-mode emission rule: only buckets whose
@@ -353,7 +364,7 @@ object Streaming {
     * driver materialization anywhere. */
   val streamSessionParity = Q(
     "stream_session_parity",
-    (spark, sfDir) => graft.util.Memo(spark,
+    (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamsession:${Tables.tableKey(sfDir, "events")}") {
       withStreamConf(spark, sfDir) {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -379,7 +390,6 @@ object Streaming {
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       spark.read.parquet(s"$base/out")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       }
     }.orderBy("user_id", "session_start"),
     // ts_session's gaps-and-islands oracle + the append emission rule:
@@ -424,7 +434,7 @@ object Streaming {
     * is one hash agg over the sink files. */
   val streamJoinParity = Q(
     "stream_join_parity",
-    (spark, sfDir) => graft.util.Memo(spark,
+    (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamjoin:${Tables.tableKey(sfDir, "events")}") {
       withStreamConf(spark, sfDir) {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -461,7 +471,6 @@ object Streaming {
         .agg(count(lit(1)).as("n_pairs"),
           countDistinct(col("click_id")).as("n_clicks_converted"),
           countDistinct(col("purchase_id")).as("n_purchases_attributed"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       }
     }.orderBy("user_id"),
     Some("""SELECT c.user_id, count(*) AS n_pairs,
@@ -500,7 +509,7 @@ object Streaming {
     * data files, and the only driver values are the two staging bounds. */
   val streamRestartParity = Q(
     "stream_restart_parity",
-    (spark, sfDir) => graft.util.Memo(spark,
+    (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamrestart:${Tables.tableKey(sfDir, "events")}") {
       withStreamConf(spark, sfDir) {
       val ev = Tables.events(spark, sfDir)
@@ -551,7 +560,6 @@ object Streaming {
       stage(ev.filter(col("ts") > lit(splitTs)))
       runOnce() // run 2: restart over the SAME checkpoint — state restored
       spark.read.parquet(s"$base/out")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       }
     }.orderBy("bucket", "event_type"),
     // stream_file_sink_parity's oracle verbatim: the restart must be
@@ -591,7 +599,7 @@ object Streaming {
     * null-side emission adds no state, only eviction-time output. */
   val streamOuterJoinParity = Q(
     "stream_outer_join_parity",
-    (spark, sfDir) => graft.util.Memo(spark,
+    (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamouterjoin:${Tables.tableKey(sfDir, "events")}") {
       withStreamConf(spark, sfDir) {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -630,7 +638,6 @@ object Streaming {
           sum(when(col("purchase_id").isNull, 1L).otherwise(0L))
             .as("n_null_emitted"),
           countDistinct(col("click_id")).as("n_clicks_seen"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       }
     }.orderBy("user_id"),
     Some("""WITH wm AS (SELECT least(
@@ -677,7 +684,7 @@ object Streaming {
     * bounded because late rows never re-open windows. */
   val streamLateDropParity = Q(
     "stream_late_drop_parity",
-    (spark, sfDir) => graft.util.Memo(spark,
+    (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamlatedrop:${Tables.tableKey(sfDir, "events")}") {
       withStreamConf(spark, sfDir) {
       val ev = Tables.events(spark, sfDir)
@@ -712,7 +719,6 @@ object Streaming {
       stage(ev.filter(col("ts") <= lit(split)))
       runOnce() // run 2: the earlier half arrives LATE — all rows dropped
       spark.read.parquet(s"$base/out")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       }
     }.orderBy("bucket", "event_type"),
     // aggregate over the on-time wave only + the append emission rule —
@@ -764,7 +770,7 @@ object Streaming {
     * loop (at-least-once upstream → exactly-once files). */
   val streamDedupParity = Q(
     "stream_dedup_parity",
-    (spark, sfDir) => graft.util.Memo(spark,
+    (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamdedup:${Tables.tableKey(sfDir, "events")}") {
       withStreamConf(spark, sfDir) {
       val ev = Tables.events(spark, sfDir)
@@ -808,7 +814,6 @@ object Streaming {
       spark.read.parquet(s"$base/out")
         .select(col("event_id"), col("user_id"), col("event_type"),
           D.ntz(col("ts")).as("ts"), col("value"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       }
     }.orderBy("event_id"),
     // every injected duplicate must vanish: the files ARE the events table
@@ -880,7 +885,7 @@ object Streaming {
     * for an all-time per-entity profile. */
   val streamTwsParity = Q(
     "stream_tws_parity",
-    (spark, sfDir) => graft.util.Memo(spark,
+    (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamtws:${Tables.tableKey(sfDir, "events")}") {
       withStreamConf(spark, sfDir) {
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
@@ -925,7 +930,6 @@ object Streaming {
           .groupBy("user_id")
           .agg(max(col("n_events")).as("n_events"),
             expr("max_by(sum_cents, n_events)").as("sum_cents"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       }
       }
     }.orderBy("user_id"),
@@ -958,7 +962,7 @@ object Streaming {
     * key lives); the graded-frame recovery is one hash agg over files. */
   val streamFmgwsParity = Q(
     "stream_fmgws_parity",
-    (spark, sfDir) => graft.util.Memo(spark,
+    (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamfmgws:${Tables.tableKey(sfDir, "events")}") {
       withStreamConf(spark, sfDir) {
       import org.apache.spark.sql.Encoders
@@ -1014,7 +1018,6 @@ object Streaming {
         .groupBy("user_id")
         .agg(max(col("n_events")).as("n_events"),
           expr("max_by(sum_cents, n_events)").as("sum_cents"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       }
     }.orderBy("user_id"),
     // stream_tws_parity's oracle VERBATIM: the two user-state APIs must
@@ -1111,13 +1114,12 @@ object Streaming {
 
   val streamStateReaderParity = Q(
     "stream_state_reader_parity",
-    (spark, sfDir) => graft.util.Memo(spark,
+    (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamstatereader:${Tables.tableKey(sfDir, "events")}") {
       // the graded frame: the checkpoint's retained state, decoded from
       // the internal (count, decimal-sum) aggregation buffers
       decodedStateBuckets(spark, s"${stateReaderBase(spark, sfDir)}/ckpt",
           batchId = None)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }.orderBy("bucket", "event_type"),
     // batch aggregate under the COMPLEMENT of the append emission rule:
     // exactly the still-open buckets live in the store
@@ -1153,11 +1155,10 @@ object Streaming {
     * is an ops-configured constant, never data-sized. */
   val streamStateTimetravel = Q(
     "stream_state_timetravel",
-    (spark, sfDir) => graft.util.Memo(spark,
+    (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamstatett:${Tables.tableKey(sfDir, "events")}") {
       decodedStateBuckets(spark, s"${stateReaderBase(spark, sfDir)}/ckpt",
           batchId = Some(0L))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }.orderBy("bucket", "event_type"),
     // batch 0 ran with watermark 0: the snapshot is the FULL aggregate
     Some(s"""SELECT time_bucket(INTERVAL 1 HOUR, ts) AS bucket,
@@ -1298,7 +1299,7 @@ object Streaming {
     * (maxFilesPerTrigger), not corpus size. */
   val streamTimerParity = Q(
     "stream_timer_parity",
-    (spark, sfDir) => graft.util.Memo(spark,
+    (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamtimer:${Tables.tableKey(sfDir, "events")}") {
       withStreamConf(spark, sfDir) {
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
@@ -1349,7 +1350,6 @@ object Streaming {
             D.ntz(col("session_start")).as("session_start"),
             D.ntz(col("session_end")).as("session_end"),
             col("n_events"), col("sum_value"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       }
       }
     }.orderBy("user_id", "session_start"),
@@ -1453,12 +1453,11 @@ object Streaming {
     * constant, independent of corpus size. */
   val streamDropdupWithinWatermark = Q(
     "stream_dropdup_within_watermark",
-    (spark, sfDir) => graft.util.Memo(spark,
+    (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamdropdupww:frame:${Tables.tableKey(sfDir, "events")}") {
       spark.read.parquet(s"${dropdupWwBase(spark, sfDir)}/out")
         .select(col("event_id"), col("user_id"), col("event_type"),
           D.ntz(col("ts")).as("ts"), col("value"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }.orderBy("event_id"),
     Some("""SELECT event_id, user_id, event_type, ts, value
             FROM events ORDER BY event_id"""))

@@ -17,7 +17,7 @@ object TextOps {
 
   /** The text tier's SINGLE tokenize pass (round-5 verdict #2): documents
     * plus its whitespace token array `tk`, spread on doc_id to the
-    * session's shuffle parallelism, persisted, memoized per (session,
+    * session's shuffle parallelism, stored (Memo.frame) per (session,
     * sfDir). Every text plan derives from this frame, so the parquet scan
     * + split regex run once per session instead of once per query — the
     * session-cache form of the materialized "tokenized" intermediate a
@@ -29,13 +29,12 @@ object TextOps {
     * terms — whitespace lowercases to itself, so split∘lower ≡ lower∘split
     * token-for-token. */
   def docToks(spark: SparkSession, sfDir: String): DataFrame =
-    graft.util.Memo(spark,
+    graft.util.Memo.frame(spark,
         s"$sfDir:doctoks:${Tables.tableKey(sfDir, "documents")}") {
       Tables.documents(spark, sfDir)
         .repartition(spark.sessionState.conf.numShufflePartitions,
           col("doc_id"))
         .withColumn("tk", split(col("text"), " ", -1))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Exact duplicate-text removal: keep the lowest doc_id per md5(text).
@@ -610,15 +609,15 @@ object TextOps {
     * doc_id < 300 cap bounds the FIXTURE bucket skew (the synthetic corpus
     * shares a ~40-word vocabulary, so uncapped band buckets degenerate);
     * real corpora spread over 2^8 values per band. The signature frame is
-    * persisted: it feeds both sides of the self-join, and without it the
+    * memoized: it feeds both sides of the self-join, and without it the
     * tokenize→bit-vote subtree executes twice (the text_tfidf lesson). */
   val textSimhashBandPairs = Q(
     "text_simhash_band_pairs",
     (spark, sfDir) => {
-      // persist + per-session memo: the signature frame feeds both sides
-      // of the band self-join; the memo keeps bench reps from stacking a
-      // fresh persisted copy per invocation
-      val sig = graft.util.Memo(spark,
+      // per-session memo: the signature frame feeds both sides of the
+      // band self-join, and bench reps reuse one stored copy instead of
+      // stacking a fresh one per invocation
+      val sig = graft.util.Memo.frame(spark,
           s"$sfDir:simhash_sig:${Tables.tableKey(sfDir, "documents")}") {
         docToks(spark, sfDir)
           .filter(col("doc_id") < 300)
@@ -636,7 +635,6 @@ object TextOps {
           .groupBy("doc_id")
           .agg(sum(expr("shiftleft(CAST(CASE WHEN s >= 0 THEN 1 ELSE 0 END AS BIGINT), p)"))
             .cast("bigint").as("sh"))
-          .persist()
       }
       val bands = sig.select(col("doc_id"), col("sh"),
         posexplode(array((0 until 4).map(b =>
@@ -1105,11 +1103,16 @@ object TextOps {
     * shingle explode + content-address join runs once per (session,
     * corpus generation), consumers re-read the tiny run frame. */
   private def substringRuns(spark: SparkSession, sfDir: String): DataFrame =
-    graft.util.Memo(spark,
+    graft.util.Memo.frame(spark,
         s"$sfDir:subruns:${Tables.tableKey(sfDir, "documents")}") {
-      graft.ops.Ops.sharedTokenRuns(docToks(spark, sfDir),
-        col("doc_id"), col("tk"), shingle = 8, minRunTokens = 16).persist()
+      substringRunsBuild(spark, sfDir)
     }
+
+  /** The run detection `substringRuns` stores. */
+  private[graft] def substringRunsBuild(spark: SparkSession, sfDir: String)
+      : DataFrame =
+    graft.ops.Ops.sharedTokenRuns(docToks(spark, sfDir),
+      col("doc_id"), col("tk"), shingle = 8, minRunTokens = 16)
 
   val textSubstringDedup = Q(
     "text_substring_dedup",
@@ -1445,14 +1448,14 @@ object TextOps {
     * fixpoint and grades against the true recursive-CTE answer.
     *
     * 100-TB shape: banding → EQUI-joins only; verify touches candidates
-    * only; the edge frame is memoized + persisted (it feeds both
+    * only; the edge frame is memoized (it feeds both
     * propagation rounds); propagation shuffles on ids. The doc_id < 200
     * cap matches the banding siblings (fixture-vocabulary bucket skew);
     * every stage is the uncapped production shape. */
   /** The dedup tier's ONE verified near-dup edge list (factored round-11):
     * LSH banding generates candidates (text_minhash_band_pairs' shape),
     * exact Jaccard ≥ 0.5 verifies them, verified pairs are symmetrized.
-    * Memoized + persisted — it feeds text_dedup_survivors (the bounded
+    * Memoized — it feeds text_dedup_survivors (the bounded
     * 2-round variant; kept unigram + doc_id < 200 so the pair of keys
     * grades BOTH banding parameterizations). text_dedup_cc moved to the
     * full-corpus shingle-hash edges (dedupShingleEdges, round-12). */
@@ -1478,10 +1481,9 @@ object TextOps {
       .filter(round(col("inter").cast("double")
         / (col("n1") + col("n2") - col("inter")), 4) >= 0.5)
       .select("d1", "d2")
-    graft.util.Memo(spark,
+    graft.util.Memo.frame(spark,
         s"$sfDir:dedup_surv_edges:${Tables.tableKey(sfDir, "documents")}") {
       dup.unionByName(dup.select(col("d2").as("d1"), col("d1").as("d2")))
-        .persist()
     }
   }
 
@@ -1573,7 +1575,7 @@ object TextOps {
     * ≥ 0.5 verifies candidates (candidates ONLY — never all pairs).
     * The oracle replays the identical md5 minhash family, so the
     * candidate set is deterministic across engines by construction.
-    * Memoized + persisted; symmetrized. 100-TB shape: one explode +
+    * Memoized; symmetrized. 100-TB shape: one explode +
     * hash-agg for signatures, band-key EQUI-join for candidates,
     * candidate-only verify — every stage linear or candidate-bounded. */
   /** Per-doc stride-1 8-token shingle array — the unit of the full-corpus
@@ -1605,23 +1607,22 @@ object TextOps {
     * pipeline keeps beside the corpus. */
   private[queries] def termCounts(spark: SparkSession, sfDir: String)
       : DataFrame =
-    graft.util.Memo(spark,
+    graft.util.Memo.frame(spark,
         s"$sfDir:termcounts:${Tables.tableKey(sfDir, "documents")}") {
       docToks(spark, sfDir)
         .select(explode(transform(col("tk"), t => lower(t))).as("term"))
         .filter(length(col("term")) > 0)
         .groupBy("term").agg(count(lit(1)).as("cnt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Memoized (doc_id, term, tf, df) frame — round 18: text_tfidf,
     * text_keyword_topk and text_bm25_rank each rebuilt the identical
     * corpus explode → (doc, term) tf hash agg → term-partitioned df
-    * window. One build per (session, corpus), persisted; consumers are
+    * window. One stored build per (session, corpus); consumers are
     * projections/filters over it. df stays the window form (not a
     * groupBy + self-join) for the reason text_tfidf documents. */
   private def tfDf(spark: SparkSession, sfDir: String): DataFrame =
-    graft.util.Memo(spark,
+    graft.util.Memo.frame(spark,
         s"$sfDir:tfdf:${Tables.tableKey(sfDir, "documents")}") {
       docToks(spark, sfDir)
         .select(col("doc_id"),
@@ -1630,18 +1631,17 @@ object TextOps {
         .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
         .withColumn("df",
           count(lit(1)).over(Window.partitionBy("term")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Memoized full-outer-joined per-parity-slice term counts
     * (term, ca, cb) — round 18: text_token_drift and text_js_divergence
     * each rebuilt the identical two slice aggs + full-outer term join
     * from a fresh corpus explode. Consumers derive their 1-row totals
-    * from the persisted frame (sum over a full-outer side ≡ the sum over
+    * from the stored frame (sum over a full-outer side ≡ the sum over
     * that side's own aggregate — sum skips the join's nulls). */
   private def sliceTermCounts(spark: SparkSession, sfDir: String)
       : DataFrame =
-    graft.util.Memo(spark,
+    graft.util.Memo.frame(spark,
         s"$sfDir:slicetermcounts:${Tables.tableKey(sfDir, "documents")}") {
       val toks = docToks(spark, sfDir)
         .select(col("doc_id"),
@@ -1652,7 +1652,6 @@ object TextOps {
       val cb = toks.filter(col("doc_id") % 2 === 1)
         .groupBy("term").agg(count(lit(1)).as("cb"))
       ca.join(cb, Seq("term"), "full_outer")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Memoized banded candidate pairs over the doc_id < cap unigram slice
@@ -1662,20 +1661,24 @@ object TextOps {
     * (text_dedup_eval, text_dedup_threshold_sweep); each rebuild re-ran
     * the per-doc signature expressions and the band equi-join. Same
     * session-cache shape as shinglePairMeasures: banding runs once per
-    * (session, corpus, cap), consumers read the persisted pairs. */
+    * (session, corpus, cap), consumers read the stored pairs. */
   private def unigramCandPairs(spark: SparkSession, sfDir: String,
       cap: Int): DataFrame =
-    graft.util.Memo(spark,
+    graft.util.Memo.frame(spark,
         s"$sfDir:unigram_cand_$cap:${Tables.tableKey(sfDir, "documents")}") {
-      graft.ops.Ops.minhashCandidatePairsArr(
-          docToks(spark, sfDir).filter(col("doc_id") < cap),
-          col("doc_id"), col("tk"), numHashes = 8, bands = 2)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      unigramCandBuild(spark, sfDir, cap)
     }
+
+  /** The banding `unigramCandPairs` stores. */
+  private[graft] def unigramCandBuild(spark: SparkSession, sfDir: String,
+      cap: Int): DataFrame =
+    graft.ops.Ops.minhashCandidatePairsArr(
+      docToks(spark, sfDir).filter(col("doc_id") < cap),
+      col("doc_id"), col("tk"), numHashes = 8, bands = 2)
 
   private def shinglePairMeasures(spark: SparkSession, sfDir: String)
       : DataFrame =
-    graft.util.Memo(spark,
+    graft.util.Memo.frame(spark,
         s"$sfDir:shingle_pair_measures:${Tables.tableKey(sfDir, "documents")}") {
       // Round-13 cold-cost cut (VERDICT-r12 #1): the whole signature/set
       // stage is ROW-LOCAL — minhash signatures via Ops.minhashSignatures'
@@ -1692,13 +1695,12 @@ object TextOps {
         .minhashCandidatePairsArr(withSh, col("doc_id"), col("sh"),
           numHashes = 8, bands = 4)
         .select(col("id1").as("d1"), col("id2").as("d2"))
-      // Cached for the session alongside the memoized result frame (a few
-      // MB at sf0.1; freed with the session / Graft.freeCaches).
+      // read by both candidate-side joins; the checkpoint below runs
+      // the whole plan once, so it needs no cache of its own
       val sets = withSh
         .select(col("doc_id"),
           sort_array(array_distinct(transform(col("sh"), s => md5(s))))
             .as("ts"))
-        .persist()
       cand
         .join(sets.select(col("doc_id").as("sd1"), col("ts").as("t1")),
           col("d1") === col("sd1"))
@@ -1714,7 +1716,6 @@ object TextOps {
             .cast("bigint").as("inter"),
           size(col("t1")).cast("bigint").as("n1"),
           size(col("t2")).cast("bigint").as("n2"))
-        .persist()
     }
 
   private def dedupShingleEdges(spark: SparkSession, sfDir: String)
@@ -1723,12 +1724,23 @@ object TextOps {
       .filter(round(col("inter").cast("double")
         / (col("n1") + col("n2") - col("inter")), 4) >= 0.5)
       .select("d1", "d2")
-    graft.util.Memo(spark,
+    graft.util.Memo.frame(spark,
         s"$sfDir:dedup_shingle_edges:${Tables.tableKey(sfDir, "documents")}") {
       dup.unionByName(dup.select(col("d2").as("d1"), col("d1").as("d2")))
-        .persist()
     }
   }
+
+  /** The memoized fixpoint clustering of the whole corpus over
+    * `dedupShingleEdges` — shared by text_dedup_cc and
+    * ml_dedup_safe_split. */
+  private def dedupCc(spark: SparkSession, sfDir: String): DataFrame =
+    graft.util.Memo.frame(spark,
+        s"$sfDir:dedup_cc_full:${Tables.tableKey(sfDir, "documents")}") {
+      graft.ops.Ops.ccFixpoint(
+        docToks(spark, sfDir).select("doc_id"), col("doc_id"),
+        dedupShingleEdges(spark, sfDir), col("d1"), col("d2"),
+        maxRounds = 20)
+    }
 
   /** Convergence-checked connected components over the verified near-dup
     * graph (round-11, VERDICT-r10 #1; round-12 lifts the `doc_id < 200`
@@ -1750,19 +1762,12 @@ object TextOps {
     * 100-TB shape: two id-keyed shuffles per round over the memoized
     * edge frame; rounds ∝ component diameter, which for near-dup
     * clusters is small — the changed-count action per round is a
-    * cached-frame scan. See Ops.ccFixpoint for the persist/unpersist
+    * stored-frame scan. See Ops.ccFixpoint for the checkpoint/release
     * frontier discipline. */
   val textDedupCc = Q(
     "text_dedup_cc",
     (spark, sfDir) => {
-      val docs = docToks(spark, sfDir)
-      val edges = dedupShingleEdges(spark, sfDir)
-      graft.util.Memo(spark,
-        s"$sfDir:dedup_cc_full:${Tables.tableKey(sfDir, "documents")}") {
-        graft.ops.Ops.ccFixpoint(
-          docs.select("doc_id"), col("doc_id"),
-          edges, col("d1"), col("d2"), maxRounds = 20)
-      }
+      dedupCc(spark, sfDir)
         .select(col("id").as("doc_id"), col("cluster"), col("converged"))
         .orderBy("doc_id")
     },
@@ -1845,14 +1850,7 @@ object TextOps {
   val mlDedupSafeSplit = Q(
     "ml_dedup_safe_split",
     (spark, sfDir) => {
-      val docs = docToks(spark, sfDir)
-      val edges = dedupShingleEdges(spark, sfDir)
-      val cc = graft.util.Memo(spark,
-        s"$sfDir:dedup_cc_full:${Tables.tableKey(sfDir, "documents")}") {
-        graft.ops.Ops.ccFixpoint(
-          docs.select("doc_id"), col("doc_id"),
-          edges, col("d1"), col("d2"), maxRounds = 20)
-      }
+      val cc = dedupCc(spark, sfDir)
       def foldOf(c: org.apache.spark.sql.Column) =
         conv(substring(md5(concat(lit("fold"), c.cast("string"))), 1, 8),
           16, 10).cast("bigint") % 5
@@ -2613,23 +2611,22 @@ object TextOps {
     "text_minhash_jaccard_est",
     (spark, sfDir) => {
       val docsF = docToks(spark, sfDir).filter(col("doc_id") < 200)
-      // ONE signature aggregation, memoized + persisted, feeding all
-      // three consumers (both candidate-join sides + the agreement math)
-      // — the call-site persist the minhashCandidatePairs doc prescribes;
+      // ONE signature aggregation, memoized, feeding all three
+      // consumers (both candidate-join sides + the agreement math) — the
+      // call-site memo the minhashCandidatePairs doc prescribes;
       // without it the tokenize→minhash agg ran 3× per invocation
       // (measured 10.1 s process-CPU at sf0.1, r10).
-      val sigRaw = graft.util.Memo(spark,
+      val sigRaw = graft.util.Memo.frame(spark,
         s"$sfDir:mhsig:200:8:${Tables.tableKey(sfDir, "documents")}") {
         graft.ops.Ops
           .minhashSignatures(docsF, col("doc_id"), col("tk"), 8)
-          .persist()
       }
       val sig = sigRaw.select(col("graft_id"),
         array((0 until 8).map(i => col(s"graft_h$i")): _*).as("sg"))
       // the memoized (slice, 8, 2) candidate frame (round 18) — the
       // expression-form banding is value-identical to bandsFromSig over
       // sigRaw (Round11OpsSpec pins the bit-equality), and the shared
-      // persisted frame costs nothing per consumer
+      // stored frame costs nothing per consumer
       val cand = unigramCandPairs(spark, sfDir, 200)
         .select(col("id1").as("d1"), col("id2").as("d2"))
       // row-local set construction — see text_lsh_dedup_verified (round 18)
@@ -3187,7 +3184,7 @@ object TextOps {
             .otherwise("4_admitted").as("outcome"))
       val staged = rejected.unionByName(survivors)
       // total ≡ the corpus row count (every doc lands in exactly one
-      // outcome), so it comes from the persisted docToks scan instead of
+      // outcome), so it comes from the stored docToks scan instead of
       // re-executing the union + dedup window a second time (round 18)
       val total = docToks(spark, sfDir).agg(count(lit(1)).as("total"))
       staged.groupBy("outcome").agg(count(lit(1)).as("n"))

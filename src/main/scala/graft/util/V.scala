@@ -24,19 +24,33 @@ object V {
 }
 
 /** Per-session memo for expensive deterministic builds (ANN indexes,
-  * persisted signature/edge frames): reps and repeat invocations reuse one
-  * entry instead of re-fitting / re-persisting per call.
+  * signature/edge frames): reps and repeat invocations reuse one entry
+  * instead of re-fitting / re-materializing per call.
   *
-  * Lifecycle is EXPLICIT: `evict`/`clear` dispose entries (unpersisting
-  * any cached frames they hold). The session key is weak only to isolate
-  * concurrent sessions; it cannot reclaim a stopped session by itself,
-  * because cached values (DataFrames, fitted models) strongly reference
-  * their SparkSession via `df.sparkSession` — the classic WeakHashMap
-  * caveat that a value strongly reaching its key pins the entry forever.
-  * A long-lived session must call `Graft.freeCaches` (or `Memo.clear`)
-  * when done with a fixture dir; Bench/Verify do so before stopping. */
+  * Frames go through `frame`, and nothing else in `graft` calls
+  * `.persist()`: a memoized frame is a LINEAGE-FREE CHECKPOINT (an eager
+  * `localCheckpoint` at MEMORY_AND_DISK). A `.persist()` would register the
+  * build's plan in the CacheManager, and that cached lineage keeps every
+  * broadcast relation the build planned (a string-keyed
+  * `UnsafeHashedRelation` pins a whole 32 MiB page) alive for the whole
+  * session. The checkpoint keeps only the rows and the build's output
+  * partitioning, so the ContextCleaner frees the build's broadcasts.
+  * Limit: checkpoint blocks have no lineage to recompute from, so losing
+  * the executor that holds them fails the reading job; the remedy is
+  * `Graft.freeCaches` (the next call rebuilds). Models, strings and byte
+  * arrays stay on `apply`/`withDispose`.
+  *
+  * Lifecycle is EXPLICIT: `evict`/`clear` dispose entries (releasing the
+  * blocks of the frames they hold). The session key is weak only to
+  * isolate concurrent sessions; it cannot reclaim a stopped session by
+  * itself, because cached values (DataFrames, fitted models) strongly
+  * reference their SparkSession via `df.sparkSession` — the classic
+  * WeakHashMap caveat that a value strongly reaching its key pins the
+  * entry forever. A long-lived session must call `Graft.freeCaches` (or
+  * `Memo.clear`) when done with a fixture dir; Bench/Verify do so before
+  * stopping. */
 object Memo {
-  import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.{DataFrame, SparkSession}
 
   /** One memo slot. The build is deferred behind a lazy val so it runs
     * OUTSIDE the session map's critical section (ADVICE-r9: some builds
@@ -46,8 +60,12 @@ object Memo {
     * under this Entry's own monitor, so concurrent readers of the SAME
     * key still get exactly one build; `dispose` shares that monitor and
     * only fires if the build actually ran — disposing a never-forced
-    * loser entry must not trigger the build it exists to avoid. */
-  private final class Entry(build0: () => (AnyRef, () => Unit)) {
+    * loser entry must not trigger the build it exists to avoid.
+    * `selfReclaiming`: the value's resources go back to Spark by
+    * themselves once it is unreachable (a checkpointed frame's RDD is
+    * ContextCleaner-registered), so an orphaned value needs no disposer. */
+  private final class Entry(build0: () => (AnyRef, () => Unit),
+      selfReclaiming: Boolean) {
     @volatile private var evaluated = false
     private var dead = false        // guarded by this
     private var disposerRan = false // guarded by this
@@ -57,15 +75,18 @@ object Memo {
     /** Forces the build, then closes the remove-vs-force window
       * (ADVICE-r10 medium): an evict/clear that ran while evaluated was
       * still false no-op'd its dispose, after which this force would run
-      * a `.persist()`-ing build with the entry already out of the map —
-      * stranding cached blocks beyond Memo.clear's reach. dispose() now
-      * marks the entry dead, and a forced-after-dispose build runs its
-      * disposer immediately (under the same monitor the lazy init uses,
-      * so it cannot race a concurrent dispose). The caller still gets a
-      * usable value — an unpersisted frame merely recomputes on use. */
+      * the build with the entry already out of the map — stranding its
+      * resources beyond Memo.clear's reach. dispose() marks the entry
+      * dead, and a forced-after-dispose build runs its disposer
+      * immediately (under the same monitor the lazy init uses, so it
+      * cannot race a concurrent dispose). The caller still gets a usable
+      * value: a non-frame value is only unpersisted, and a checkpointed
+      * frame is left readable for its caller and reclaimed by the
+      * ContextCleaner once dropped (releasing it here would leave the
+      * caller a frame whose blocks are gone and cannot be recomputed). */
     def value: AnyRef = {
       val v = resolved._1
-      synchronized { if (dead) runDisposerOnce() }
+      if (!selfReclaiming) synchronized { if (dead) runDisposerOnce() }
       v
     }
     def dispose(): Unit = synchronized {
@@ -83,27 +104,103 @@ object Memo {
       scala.collection.concurrent.TrieMap[String, Entry]]
 
   /** Memoize `build`, disposing on evict by unpersisting the value when
-    * it is a Dataset/DataFrame (the common case). Values that hold cached
-    * frames indirectly should use `withDispose`. */
+    * it is a Dataset/DataFrame. Memoized frames belong in `frame`; values
+    * that hold frames indirectly use `withDispose`. */
   def apply[T <: AnyRef](spark: SparkSession, key: String)(build: => T): T =
     withDispose(spark, key)(build) {
       case ds: org.apache.spark.sql.Dataset[_] => ds.unpersist(false)
       case _ => ()
     }
 
+  /** Memoize a frame as a lineage-free checkpoint (see the object doc):
+    * the build runs once, its rows are stored eagerly by `checkpoint`,
+    * and evict/clear release the blocks. */
+  def frame(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    memoize(spark, key, selfReclaiming = true)(checkpoint(build))(release)
+
   /** Memoize `build` with an explicit disposer run on evict/clear.
     * putIfAbsent elects one winner per key; only the INSERTED entry's
-    * build is ever forced, so a racing loser's `.persist()`-ing build
-    * never runs and cannot strand cached blocks. Builds for DIFFERENT
-    * keys proceed concurrently — the map itself is only touched by the
-    * lock-free TrieMap CAS. */
+    * build is ever forced, so a racing loser's build never runs and
+    * cannot strand cached blocks. Builds for DIFFERENT keys proceed
+    * concurrently — the map itself is only touched by the lock-free
+    * TrieMap CAS. */
   def withDispose[T <: AnyRef](spark: SparkSession, key: String)
-      (build: => T)(dispose: T => Unit): T = {
+      (build: => T)(dispose: T => Unit): T =
+    memoize(spark, key, selfReclaiming = false)(build)(dispose)
+
+  private def memoize[T <: AnyRef](spark: SparkSession, key: String,
+      selfReclaiming: Boolean)(build: => T)(dispose: T => Unit): T = {
     val m = mapFor(spark)
-    val fresh = new Entry(() => { val v = build; (v, () => dispose(v)) })
+    val fresh = new Entry(() => { val v = build; (v, () => dispose(v)) },
+      selfReclaiming)
     val e = m.putIfAbsent(key, fresh).getOrElse(fresh)
     e.value.asInstanceOf[T]
   }
+
+  /** `df` stored as an eager local checkpoint at MEMORY_AND_DISK: the
+    * plan runs once, the returned frame reads the stored rows and keeps
+    * `df`'s output partitioning, and no lineage (so no broadcast) of `df`
+    * stays reachable from it. A frame that already is a checkpoint is
+    * returned as is. Pair every call with `release`, or memoize through
+    * `frame`, which does. */
+  def checkpoint(df: DataFrame): DataFrame =
+    if (checkpointRdd(df).isDefined) df
+    else withProducedPartitioning(df, df.localCheckpoint(eager = true,
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+
+  /** `localCheckpoint` records the origin's executed-plan partitioning,
+    * which under AQE is the adaptive wrapper's UnknownPartitioning — a
+    * doc_id-partitioned build would make every consumer shuffle it
+    * again. The stored rows come from the FINAL adaptive plan, so its
+    * partitioning is the one that holds; re-wrap the stored RDD with it
+    * (first leaf of a collection, and only over the frame's own columns,
+    * as Spark's own recorder does). Size and row-count estimates carry
+    * over from the origin's optimized plan. */
+  private def withProducedPartitioning(origin: DataFrame, cp: DataFrame)
+      : DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeSet, Expression}
+    import org.apache.spark.sql.catalyst.plans.logical.Statistics
+    import org.apache.spark.sql.catalyst.plans.physical.{PartitioningCollection, UnknownPartitioning}
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    (cp.queryExecution.analyzed, origin.queryExecution.executedPlan) match {
+      case (l: LogicalRDD, aqe: AdaptiveSparkPlanExec)
+          if l.outputPartitioning.isInstanceOf[UnknownPartitioning] =>
+        val produced = aqe.executedPlan.outputPartitioning match {
+          case c: PartitioningCollection => c.partitionings.head
+          case p => p
+        }
+        val ownColumns = produced match {
+          case e: Expression => e.references.subsetOf(AttributeSet(l.output))
+          case _ => true
+        }
+        if (produced.isInstanceOf[UnknownPartitioning] || !ownColumns) cp
+        else {
+          val session =
+            cp.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+          val est = origin.queryExecution.optimizedPlan.stats
+          val plan = LogicalRDD(l.output, l.rdd, produced, l.outputOrdering)(
+            session, Some(Statistics(est.sizeInBytes, est.rowCount)))
+          new org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row](
+            session, plan, org.apache.spark.sql.Encoders.row(cp.schema))
+        }
+      case _ => cp
+    }
+  }
+
+  /** Frees the blocks of a frame made by `checkpoint` (no-op for any other
+    * frame). The frame cannot be read afterwards. */
+  def release(df: DataFrame): Unit =
+    checkpointRdd(df).foreach(_.unpersist(blocking = false))
+
+  /** The stored RDD behind a checkpointed frame. */
+  private def checkpointRdd(df: DataFrame)
+      : Option[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.execution.LogicalRDD
+          if l.rdd.isCheckpointed => Some(l.rdd)
+      case _ => None
+    }
 
   /** Dispose and drop one entry (pure no-op when the session has no map —
     * must not insert one, or clears on unused sessions would mutate the
@@ -113,8 +210,8 @@ object Memo {
       m.remove(key).foreach(_.dispose())
     }
 
-  /** Dispose and drop every entry of this session — unpersists all memoized
-    * cached frames. Safe to call mid-session: the next invocation simply
+  /** Dispose and drop every entry of this session — releases all memoized
+    * frames. Safe to call mid-session: the next invocation simply
     * rebuilds. Pure no-op for sessions that never memoized. */
   def clear(spark: SparkSession): Unit =
     existingMapFor(spark).foreach { m =>

@@ -1,7 +1,7 @@
 package graft
 
 import graft.queries.Registry
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Plan-shape regression gate (round-5 verdict #5): the load-bearing
   * physical-plan properties of the heaviest queries, asserted so a future
@@ -62,9 +62,14 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("LSH banding pairs broadcast the tiny signature side") {
-    Seq("text_simhash_band_pairs", "text_minhash_band_pairs",
-      "text_lsh_dedup_verified").foreach { n =>
-      assert(plan(n).contains("BroadcastHashJoin"),
+    // text_minhash_band_pairs and text_lsh_dedup_verified read their band
+    // self-join from one memoized candidate frame: its build plan is the
+    // one that carries the join
+    val minhashBands = graft.queries.TextOps.unigramCandBuild(spark, sf0001, 200)
+      .queryExecution.executedPlan.toString
+    Seq("text_simhash_band_pairs" -> plan("text_simhash_band_pairs"),
+      "minhash candidate frame" -> minhashBands).foreach { case (n, p) =>
+      assert(p.contains("BroadcastHashJoin"),
         s"$n: band self-join no longer broadcasts")
     }
   }
@@ -82,13 +87,14 @@ class PlanShapeSpec extends SparkSpec {
 
   test("ANN index frames are served from the memoized cache, not re-encoded per reference") {
     // round-8 fix: the PQ codes / IVF assignment / dedup assignment are
-    // query-independent and memoized+persisted; a plan without an
-    // InMemoryTableScan means a refactor dropped the Memo and the encode
-    // subtree re-runs per reference (measured 16-24 corpus scans)
+    // query-independent and memoized (Memo.frame checkpoints); a plan
+    // without a scan of a stored RDD means a refactor dropped the Memo and
+    // the encode subtree re-runs per reference (measured 16-24 corpus
+    // scans)
     Seq("vec_pq_adc_topk", "vec_ivf_pq_rerank", "vec_residual_pq_topk",
       "vec_semantic_dedup").foreach { n =>
-      assert(plan(n).contains("InMemoryTableScan"),
-        s"$n: no InMemoryTableScan — index memoization lost")
+      assert(plan(n).contains("Scan ExistingRDD"),
+        s"$n: no checkpointed-frame scan — index memoization lost")
     }
   }
 
@@ -107,7 +113,10 @@ class PlanShapeSpec extends SparkSpec {
       val df = Registry.byName(n).build(spark, sf0001)
       val leaves = df.queryExecution.optimizedPlan.collectLeaves()
       assert(leaves.nonEmpty)
-      val stray = leaves.filterNot(l => l.isInstanceOf[InMemoryRelation]
+      val stray = leaves.filterNot(l => (l match {
+          case r: LogicalRDD => r.rdd.isCheckpointed // a Memo.frame
+          case _ => false
+        })
         || l.getClass.getSimpleName.contains("OneRowRelation")
         || l.getClass.getSimpleName.contains("LocalRelation"))
       assert(stray.isEmpty,
@@ -121,7 +130,9 @@ class PlanShapeSpec extends SparkSpec {
     // join allowed in this plan is the 8-row broadcast centroid assignment;
     // the pair stage must be a hash/sort-merge join keyed on the cluster
     // id, so candidate work is bounded by cluster size at any corpus scale.
-    val p = plan("vec_dup_clusters")
+    // the pair stage runs inside the memoized edge frame: check its build
+    val p = graft.queries.Vectors.dupClusterEdges(spark, sf0001)
+      .queryExecution.executedPlan.toString
     val pairCut = "v1#\\d+L? < v2#\\d+".r // attribute refs carry #exprIds
     val nested = "BroadcastNestedLoopJoin[^\\n]*".r.findAllIn(p).toList
     assert(nested.nonEmpty, "expected the 8-row broadcast centroid joins")
@@ -234,8 +245,10 @@ class PlanShapeSpec extends SparkSpec {
     // the shingle self-join must key on the content hash (broadcast or
     // shuffled hash/SMJ are all fine — Catalyst picks by stats); a
     // nested-loop anywhere means the equi-key was lost and the plan went
-    // quadratic in documents
-    val p = plan("text_substring_dedup")
+    // quadratic in documents. The join runs inside the memoized run
+    // frame text_substring_dedup reads, so its build plan is checked.
+    val p = graft.queries.TextOps.substringRunsBuild(spark, sf0001)
+      .queryExecution.executedPlan.toString
     assert(p.contains("HashJoin") || p.contains("SortMergeJoin"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"),
       s"substring dedup must never pair-scan:\n$p")

@@ -81,12 +81,10 @@ class SinkSpec extends SparkSpec {
     // read back WITH the partition column and verify the routing itself:
     // each written row's dir value must equal the month derived from its
     // own o_orderdate
-    // the ONE tag derivation (Sinks.sfTag, ADVICE-r14): an inline re-derive
-    // drifted when the tag scheme changed from hashCode to md5 and only
-    // passed against a stale /tmp layout — share the method instead
-    val dirHash = graft.queries.Sinks.sfTag(sf001)
-    val written = spark.read
-      .parquet(s"/tmp/graft_sink/orders_month_$dirHash")
+    // the ONE path derivation (Sinks.sinkDir, ADVICE-r14): an inline
+    // re-derive drifted when the tag scheme changed from hashCode to md5
+    // and only passed against a stale layout — share the method instead
+    val written = spark.read.parquet(graft.queries.Sinks.sinkDir(sf001))
     val misrouted = written.filter(
       col("month").cast("string") =!=
         date_format(col("o_orderdate"), "yyyy-MM")).count()
