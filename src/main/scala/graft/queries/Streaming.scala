@@ -193,6 +193,15 @@ object Streaming {
     }
   }
 
+  /** A memoized stream build's frame, stored (`Memo.checkpoint`) BEFORE
+    * the stream scope exits: the copy off the stream's sink is planned
+    * under the stream partition count, as the build itself is. The
+    * enclosing `Memo.frame` finds the frame already stored and keeps it. */
+  private def streamCheckpoint(spark: org.apache.spark.sql.SparkSession,
+      sfDir: String)(build: => org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    withStreamConf(spark, sfDir)(graft.util.Memo.checkpoint(build))
+
   /** Keys whose build mutates `stateStore.providerClass` (RocksDB for
     * transformWithState) — Bench must not prebuild these concurrently
     * with the OTHER streaming builds: the provider conf is session-global
@@ -243,7 +252,7 @@ object Streaming {
     "stream_tumbling_parity",
     (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamtumbling:${Tables.tableKey(sfDir, "events")}") {
-      withStreamConf(spark, sfDir) {
+      streamCheckpoint(spark, sfDir) {
       val path = s"$sfDir/events.parquet"
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val rawSchema = spark.read.parquet(path).schema
@@ -271,9 +280,9 @@ object Streaming {
       val out = spark.table(name)
         .select(D.ntz(col("window.start")).as("bucket"), col("event_type"),
           col("n"), col("sum_value"))
-      // Memo.frame's eager checkpoint copies the rows OFF the memory sink
-      // right here: the graded frame must not read a sink another start()
-      // could touch; rows are calendar×types-sized
+      // streamCheckpoint copies the rows OFF the memory sink before the
+      // stream scope exits: the graded frame must not read a sink another
+      // start() could touch; rows are calendar×types-sized
       out
       }
     }.orderBy("bucket", "event_type"),
@@ -305,7 +314,7 @@ object Streaming {
     "stream_file_sink_parity",
     (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamfilesink:${Tables.tableKey(sfDir, "events")}") {
-      withStreamConf(spark, sfDir) {
+      streamCheckpoint(spark, sfDir) {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val rawSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
       val ts = rawSchema("ts").dataType match {
@@ -366,7 +375,7 @@ object Streaming {
     "stream_session_parity",
     (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamsession:${Tables.tableKey(sfDir, "events")}") {
-      withStreamConf(spark, sfDir) {
+      streamCheckpoint(spark, sfDir) {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val rawSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
       val ts = rawSchema("ts").dataType match {
@@ -436,7 +445,7 @@ object Streaming {
     "stream_join_parity",
     (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamjoin:${Tables.tableKey(sfDir, "events")}") {
-      withStreamConf(spark, sfDir) {
+      streamCheckpoint(spark, sfDir) {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val rawSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
       def side(tpe: String, idAs: String, userAs: String, tsAs: String) = {
@@ -511,7 +520,7 @@ object Streaming {
     "stream_restart_parity",
     (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamrestart:${Tables.tableKey(sfDir, "events")}") {
-      withStreamConf(spark, sfDir) {
+      streamCheckpoint(spark, sfDir) {
       val ev = Tables.events(spark, sfDir)
         .select(col("event_id"), col("event_type"),
           // watermarks need session-zoned TIMESTAMP (UTC session: values
@@ -601,7 +610,7 @@ object Streaming {
     "stream_outer_join_parity",
     (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamouterjoin:${Tables.tableKey(sfDir, "events")}") {
-      withStreamConf(spark, sfDir) {
+      streamCheckpoint(spark, sfDir) {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val rawSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
       def side(tpe: String, idAs: String, userAs: String, tsAs: String) = {
@@ -686,7 +695,7 @@ object Streaming {
     "stream_late_drop_parity",
     (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamlatedrop:${Tables.tableKey(sfDir, "events")}") {
-      withStreamConf(spark, sfDir) {
+      streamCheckpoint(spark, sfDir) {
       val ev = Tables.events(spark, sfDir)
         .select(col("event_id"), col("event_type"),
           col("ts").cast("timestamp").as("ts"), col("value"))
@@ -772,7 +781,7 @@ object Streaming {
     "stream_dedup_parity",
     (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamdedup:${Tables.tableKey(sfDir, "events")}") {
-      withStreamConf(spark, sfDir) {
+      streamCheckpoint(spark, sfDir) {
       val ev = Tables.events(spark, sfDir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("ts").cast("timestamp").as("ts"), col("value"))
@@ -887,7 +896,7 @@ object Streaming {
     "stream_tws_parity",
     (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamtws:${Tables.tableKey(sfDir, "events")}") {
-      withStreamConf(spark, sfDir) {
+      streamCheckpoint(spark, sfDir) {
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
       withRocksProvider(spark) {
         val ev = Tables.events(spark, sfDir)
@@ -964,7 +973,7 @@ object Streaming {
     "stream_fmgws_parity",
     (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamfmgws:${Tables.tableKey(sfDir, "events")}") {
-      withStreamConf(spark, sfDir) {
+      streamCheckpoint(spark, sfDir) {
       import org.apache.spark.sql.Encoders
       import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
       val ev = Tables.events(spark, sfDir)
@@ -1301,7 +1310,7 @@ object Streaming {
     "stream_timer_parity",
     (spark, sfDir) => graft.util.Memo.frame(spark,
         s"$sfDir:streamtimer:${Tables.tableKey(sfDir, "events")}") {
-      withStreamConf(spark, sfDir) {
+      streamCheckpoint(spark, sfDir) {
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
       withRocksProvider(spark) {
         val ev = Tables.events(spark, sfDir)

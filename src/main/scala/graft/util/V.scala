@@ -139,9 +139,9 @@ object Memo {
 
   /** `df` stored as an eager local checkpoint at MEMORY_AND_DISK: the
     * plan runs once, the returned frame reads the stored rows and keeps
-    * `df`'s output partitioning, and no lineage (so no broadcast) of `df`
-    * stays reachable from it. A frame that already is a checkpoint is
-    * returned as is. Pair every call with `release`, or memoize through
+    * `df`'s shuffle layout (see `withProducedPartitioning`), and no
+    * lineage (so no broadcast) of `df` stays reachable from it. A frame
+    * that already is a checkpoint is returned as is. Pair every call with `release`, or memoize through
     * `frame`, which does. */
   def checkpoint(df: DataFrame): DataFrame =
     if (checkpointRdd(df).isDefined) df
@@ -155,18 +155,36 @@ object Memo {
     * partitioning is the one that holds; re-wrap the stored RDD with it
     * (first leaf of a collection, and only over the frame's own columns,
     * as Spark's own recorder does). Size and row-count estimates carry
-    * over from the origin's optimized plan. */
+    * over from the origin's optimized plan.
+    *
+    * Only an unread shuffle's layout is exported. An `AQEShuffleReadExec`
+    * in the final stage (coalesced, skew-split or local read) serves
+    * partitions that each hold a range of the shuffle's `pmod(hash, N)`
+    * buckets. That layout holds inside the build's query; a consumer that
+    * took it for `HashPartitioning(k, n')` (as Spark 3 reported it) would
+    * shuffle a join's other side by `pmod(hash, n')` and drop matches.
+    * Such a frame keeps the checkpoint's UnknownPartitioning, as Spark
+    * leaves its own checkpointed and cached adaptive plans.
+    * `repartition(n, col)` (docToks) is never coalesced, so it keeps its
+    * layout. */
   private def withProducedPartitioning(origin: DataFrame, cp: DataFrame)
       : DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{AttributeSet, Expression}
     import org.apache.spark.sql.catalyst.plans.logical.Statistics
     import org.apache.spark.sql.catalyst.plans.physical.{PartitioningCollection, UnknownPartitioning}
     import org.apache.spark.sql.execution.LogicalRDD
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, ResultQueryStageExec}
     (cp.queryExecution.analyzed, origin.queryExecution.executedPlan) match {
       case (l: LogicalRDD, aqe: AdaptiveSparkPlanExec)
           if l.outputPartitioning.isInstanceOf[UnknownPartitioning] =>
-        val produced = aqe.executedPlan.outputPartitioning match {
+        // the final stage's own operators (its plan is wrapped in a
+        // leaf stage node); reads inside earlier stages sit below an
+        // exchange and do not shape the output
+        val finalPlan = aqe.executedPlan match {
+          case r: ResultQueryStageExec => r.plan
+          case p => p
+        }
+        val produced = finalPlan.outputPartitioning match {
           case c: PartitioningCollection => c.partitionings.head
           case p => p
         }
@@ -174,7 +192,11 @@ object Memo {
           case e: Expression => e.references.subsetOf(AttributeSet(l.output))
           case _ => true
         }
-        if (produced.isInstanceOf[UnknownPartitioning] || !ownColumns) cp
+        val shuffleLayout =
+          !finalPlan.exists(_.isInstanceOf[AQEShuffleReadExec]) &&
+            produced.numPartitions == l.rdd.getNumPartitions
+        if (produced.isInstanceOf[UnknownPartitioning] || !ownColumns ||
+            !shuffleLayout) cp
         else {
           val session =
             cp.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

@@ -2,6 +2,7 @@ package graft
 
 import graft.queries.{Registry, TextOps, Vectors}
 import graft.util.Memo
+import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
@@ -55,6 +56,46 @@ class MemoFrameSpec extends SparkSpec {
       // the only shuffle left is the final ORDER BY's range partitioning
       assert("(?<!Broadcast)Exchange ".r.findAllIn(plan).length == 1, plan)
     } finally Memo.clear(spark)
+  }
+
+  test("a coalesced build keeps no hash layout: a join on its key loses no rows") {
+    // AQE coalesces the groupBy's 16 shuffle partitions into a few, each
+    // holding a RANGE of pmod(hash, 16) buckets. That layout holds only
+    // inside the build's query: a stored frame claiming it as
+    // HashPartitioning(k, n') would make a join keep the memo side and
+    // shuffle the other by pmod(hash, n'), dropping matches
+    val confs = Map(
+      "spark.sql.shuffle.partitions" -> "16",
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16384",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    Memo.clear(spark)
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      val counts = Memo.frame(spark, "memo-frame-coalesced") {
+        spark.range(0, 20000)
+          .groupBy((col("id") % 2000).as("k")).agg(count(lit(1)).as("n"))
+      }
+      val parts = counts.rdd.getNumPartitions
+      assert(parts > 1 && parts < 16,
+        s"the build must coalesce to a few partitions, got $parts")
+      counts.queryExecution.analyzed match {
+        case l: LogicalRDD =>
+          assert(l.outputPartitioning.isInstanceOf[UnknownPartitioning],
+            s"a coalesced read's layout was exported: ${l.outputPartitioning}")
+        case other => fail(s"not a stored frame: $other")
+      }
+      val keys = spark.range(0, 2000).select(col("id").as("k"))
+      assert(keys.join(counts, Seq("k")).count() == 2000)
+    } finally {
+      prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      Memo.clear(spark)
+    }
   }
 
   test("freeCaches releases every TextOps and Vectors memo: no persisted RDD, empty CacheManager") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.queries.Registry
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Plan-shape regression gate (round-5 verdict #5): the load-bearing
@@ -15,6 +16,22 @@ class PlanShapeSpec extends SparkSpec {
   private def plan(name: String): String =
     Registry.byName(name).build(spark, sf0001)
       .queryExecution.executedPlan.toString
+
+  /** The graded query `name` scans a checkpointed frame (a `Memo.frame`)
+    * with exactly `build`'s columns: the link between a graded plan and
+    * the memoized build a gate inspects in its place. */
+  private def assertReadsStored(name: String, build: DataFrame): Unit = {
+    val df = Registry.byName(name).build(spark, sf0001)
+    assert(df.queryExecution.executedPlan.toString.contains("Scan ExistingRDD"),
+      s"$name: no checkpointed-frame scan")
+    val cols = build.columns.toSeq
+    val linked = df.queryExecution.analyzed.collectLeaves().exists {
+      case r: LogicalRDD => r.rdd.isCheckpointed && r.output.map(_.name) == cols
+      case _ => false
+    }
+    assert(linked,
+      s"$name reads no stored frame with the build's columns ${cols.mkString(", ")}")
+  }
 
   private def pushedNonEmpty(p: String): Boolean =
     "PushedFilters: \\[[^\\]]".r.findFirstIn(p).isDefined
@@ -65,8 +82,10 @@ class PlanShapeSpec extends SparkSpec {
     // text_minhash_band_pairs and text_lsh_dedup_verified read their band
     // self-join from one memoized candidate frame: its build plan is the
     // one that carries the join
-    val minhashBands = graft.queries.TextOps.unigramCandBuild(spark, sf0001, 200)
-      .queryExecution.executedPlan.toString
+    val minhashBuild = graft.queries.TextOps.unigramCandBuild(spark, sf0001, 200)
+    Seq("text_minhash_band_pairs", "text_lsh_dedup_verified")
+      .foreach(assertReadsStored(_, minhashBuild))
+    val minhashBands = minhashBuild.queryExecution.executedPlan.toString
     Seq("text_simhash_band_pairs" -> plan("text_simhash_band_pairs"),
       "minhash candidate frame" -> minhashBands).foreach { case (n, p) =>
       assert(p.contains("BroadcastHashJoin"),
@@ -131,8 +150,9 @@ class PlanShapeSpec extends SparkSpec {
     // the pair stage must be a hash/sort-merge join keyed on the cluster
     // id, so candidate work is bounded by cluster size at any corpus scale.
     // the pair stage runs inside the memoized edge frame: check its build
-    val p = graft.queries.Vectors.dupClusterEdges(spark, sf0001)
-      .queryExecution.executedPlan.toString
+    val edges = graft.queries.Vectors.dupClusterEdges(spark, sf0001)
+    assertReadsStored("vec_dup_clusters", edges)
+    val p = edges.queryExecution.executedPlan.toString
     val pairCut = "v1#\\d+L? < v2#\\d+".r // attribute refs carry #exprIds
     val nested = "BroadcastNestedLoopJoin[^\\n]*".r.findAllIn(p).toList
     assert(nested.nonEmpty, "expected the 8-row broadcast centroid joins")
@@ -247,8 +267,9 @@ class PlanShapeSpec extends SparkSpec {
     // nested-loop anywhere means the equi-key was lost and the plan went
     // quadratic in documents. The join runs inside the memoized run
     // frame text_substring_dedup reads, so its build plan is checked.
-    val p = graft.queries.TextOps.substringRunsBuild(spark, sf0001)
-      .queryExecution.executedPlan.toString
+    val runs = graft.queries.TextOps.substringRunsBuild(spark, sf0001)
+    assertReadsStored("text_substring_dedup", runs)
+    val p = runs.queryExecution.executedPlan.toString
     assert(p.contains("HashJoin") || p.contains("SortMergeJoin"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"),
       s"substring dedup must never pair-scan:\n$p")
