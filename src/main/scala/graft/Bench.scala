@@ -421,7 +421,11 @@ object Bench {
     // INCLUDES the streaming prebuild (ADVICE-r16 medium): the memoized
     // streaming builds are real suite work; excluding them made 'value'
     // alone understate the suite by ~36 s. queries still holds the warm
-    // per-key reads; total − stream_prebuild_sec recovers the old number.
+    // per-key reads; total − prebuild_sec recovers the old number. Until
+    // round 18 the only prebuild was the stream one, so the subtraction
+    // used stream_prebuild_sec; since round 19 (commit 7168917) a batch
+    // prebuild runs concurrently with it and prebuild_sec is the wall of
+    // the combined region (the per-track spans overlap).
     val valid = failed.isEmpty
     // prebuildSec is the COMBINED wall of the concurrent stream+batch
     // prebuild region — the true elapsed suite cost; the per-track spans

@@ -52,7 +52,8 @@ object Graft {
   def sizeShufflePartitions(spark: SparkSession, sfDir: String): Int = {
     val cur = spark.conf.get("spark.sql.shuffle.partitions").toInt
     try {
-      val rows = spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+      // the cached scan registerViews reuses: one schema inference
+      val rows = Tables.lineitem(spark, sfDir).count()
       val cap = spark.sparkContext.defaultParallelism.toLong
       val n = math.min(cap, math.max(8L, rows / 75000L)).toInt
       spark.conf.set("spark.sql.shuffle.partitions", n.toString)

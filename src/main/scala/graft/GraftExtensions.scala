@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{Builders, CharNgrams, CosineSim, DotProduct, HammingSign, L2Sq}
+import graft.functions.{Builders, CharNgrams, CosineSim, DotProduct, HammingSign, L2Sq, TermBag}
 
 /** Session-extensions entry point — the idiomatic way a cluster enables the
   * library's native expressions for every session (including pure-SQL
@@ -42,6 +42,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("hamming_sign_native"),
       new ExpressionInfo(classOf[HammingSign].getName, "hamming_sign_native"),
       Builders.arity2("hamming_sign_native")(HammingSign(_, _))))
+    ext.injectFunction((
+      FunctionIdentifier("term_bag_native"),
+      new ExpressionInfo(classOf[TermBag].getName, "term_bag_native"),
+      Builders.arity1("term_bag_native")(TermBag(_))))
     // Optimizer rung of the extension ladder (round-11): users writing
     // the portable aggregate(zip_with(...)) dot-product fold get the
     // codegen'd DotProduct kernel automatically — see NativeDotFusion

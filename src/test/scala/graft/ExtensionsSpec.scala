@@ -35,13 +35,16 @@ class ExtensionsSpec extends AnyFunSuite {
                   cosine_native(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c,
                   l2sq_native(array(1.0D, 2.0D), array(4.0D, 6.0D)) AS l,
                   hamming_sign_native(array(1.0D, -2.0D), array(1.0D, 2.0D)) AS h,
-                  char_ngrams_native('abcd', 3) AS g
+                  char_ngrams_native('abcd', 3) AS g,
+                  term_bag_native(array('b', 'a', 'b')) AS t
         """).head()
       assert(row.getDouble(0) == 11.0)
       assert(row.getDouble(1) == 1.0)
       assert(row.getDouble(2) == 25.0)
       assert(row.getLong(3) == 1L)
       assert(row.getSeq[String](4) == Seq("abc", "bcd"))
+      assert(row.getSeq[org.apache.spark.sql.Row](5)
+        .map(r => (r.getString(0), r.getLong(1))) == Seq(("b", 2L), ("a", 1L)))
     } finally {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()

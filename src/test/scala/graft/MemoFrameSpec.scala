@@ -55,6 +55,10 @@ class MemoFrameSpec extends SparkSpec {
         s"text_entropy re-shuffles the doc_id-partitioned docToks:\n$plan")
       // the only shuffle left is the final ORDER BY's range partitioning
       assert("(?<!Broadcast)Exchange ".r.findAllIn(plan).length == 1, plan)
+      // one row-local projection over each document's term bag: no
+      // per-token explode, aggregate, join or broadcast
+      for (node <- Seq("Generate", "HashAggregate", "Join", "BroadcastExchange"))
+        assert(!plan.contains(node), s"text_entropy plans a $node:\n$plan")
     } finally Memo.clear(spark)
   }
 

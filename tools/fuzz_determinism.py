@@ -29,7 +29,11 @@ DEFAULT_QS = ["agg_stats", "agg_moments", "win_topk_group",
               "join_star_flagship", "text_tfidf", "text_minhash_band_pairs",
               "ts_session", "vec_cosine_topk", "vec_kmeans_step",
               "ml_dataset_mix", "ml_pack_sequences", "agg_twophase_salted",
-              "vec_residual_pq_topk"]  # r8: argmin windows + fixed-order ADC
+              "vec_residual_pq_topk",  # r8: argmin windows + fixed-order ADC
+              # term-bag text stats: k-weighted integer sums, bag folds
+              "text_entropy", "text_stopword_discovery", "text_zipf_slope",
+              "text_hapax_ratio", "text_rarity_score",
+              "text_unigram_lm_score"]
 
 ADD_OPENS = " ".join(
     f"--add-opens java.base/{p}=ALL-UNNAMED" for p in

@@ -27,8 +27,12 @@ while [ "$(date +%s)" -lt "$END" ]; do
     # NEVER matches — this exact bug produced the 0-byte
     # bench_r16_sbt_dress.json and the r17 no-record (VERDICT-r17 #3);
     # strip the prefix instead of anchoring on it.
+    # Bench prints two {"metric":"total"...} lines, the full record and
+    # a short tail summary; the dress file keeps only the first, full one
+    # (sed reads to the end, so sbt never writes into a closed pipe).
     SPARK_GRAFT_BENCH_REPS=1 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
       sbt "runMain graft.Bench" 2>/dev/null | grep -o '{"metric".*}' \
+      | sed -n 1p \
       > tools/bench_r18_sbt_dress.json
     if [ -s tools/bench_r18_sbt_dress.json ]; then
       echo "dress recorded $(date +%T)" >&2; break

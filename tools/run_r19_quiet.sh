@@ -20,9 +20,13 @@ while [ "$(date +%s)" -lt "$END" ]; do
   if [ "$D" -lt 120 ] && [ "$OK" = "1" ]; then
     # sbt prefixes stdout with '[info] ' — extract the JSON object rather
     # than anchoring on '^{' (the r16/r17 0-byte-dress lesson).
+    # Bench prints two {"metric":"total"...} lines, the full record and
+    # a short tail summary; the dress file keeps only the first, full one
+    # (sed reads to the end, so sbt never writes into a closed pipe).
     SPARK_GRAFT_BENCH_REPS=1 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
       SPARK_GRAFT_CPUS=32 \
       sbt "runMain graft.Bench" 2>/dev/null | grep -o '{"metric".*}' \
+      | sed -n 1p \
       > tools/bench_r19_sbt_dress.json
     if [ -s tools/bench_r19_sbt_dress.json ]; then
       echo "dress recorded $(date +%T)" >&2; break
