@@ -66,6 +66,28 @@ object Graft {
     }
   }
 
+  /** Send this session's jobs to the executor's one shared classloader.
+    * Spark 4.1 isolates session artifacts by default: every job carries
+    * its session's UUID, the executor builds one classloader per UUID,
+    * and the codegen cache is keyed by (context classloader, source). So
+    * each `newSession()`, and each stream `start()` (its micro-batches run
+    * on a `cloneSession()` with a fresh UUID), compiled every generated
+    * class again and JIT-compiled it again. The engine adds no session
+    * artifacts (no `addArtifact`, `addJar` or `ADD JAR`), so isolation
+    * guards nothing here; with it off, sessions behave as Spark 3.5
+    * classic sessions did.
+    *
+    * `Tables` calls this when it first sees a session, which is before
+    * any operator, `sizeShufflePartitions` or `registerViews` runs a
+    * query on it. Limits: Spark reads the flag once per session, at its
+    * first query, so a session that ran a query before the engine touched
+    * it keeps its own loader for its own jobs (the stream clones it
+    * starts afterwards read the flag at `start()` and do share); and an
+    * application that adds per-session artifacts through an engine-touched
+    * session shares them with the other engine sessions. */
+  def shareExecutorLoader(spark: SparkSession): Unit =
+    spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
+
   /** Convenience: register views and run one SQL text query. */
   def sql(spark: SparkSession, sfDir: String, query: String): DataFrame = {
     registerViews(spark, sfDir)
@@ -84,7 +106,11 @@ object Graft {
     * streaming key pays ~5 s of engine JIT that the per-key warm cost —
     * 0.06 s — shows is pure bring-up, not query work) and lands on
     * whichever stream key runs first. Touches NO fixture data: the
-    * two-row source is synthesized here. */
+    * two-row source is synthesized here. Each stream `start()` runs its
+    * micro-batches on a cloned session, so the classes warmed here carry
+    * over to later stream starts only because engine sessions share one
+    * executor classloader (`shareExecutorLoader`; `Bench` sets it before
+    * calling this). */
   def streamingBringUp(spark: SparkSession): Unit = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.Trigger

@@ -166,7 +166,15 @@ object Streaming {
     * each check forks a `readlink` process: a JFR recording of one
     * `ingest` benchmark run counted 1392 `readlink` starts among 2037
     * process starts. The FileSystem manager does the same renames
-    * without them. */
+    * without them.
+    *
+    * Each `start()` in this scope runs its micro-batches on a clone of
+    * `spark` (`cloneSession()`), which copies the conf set here and gets
+    * a fresh session UUID. The clone reads the artifact-isolation flag
+    * at `start()`; `Tables` has already turned it off on every engine
+    * session (`Graft.shareExecutorLoader`), so a restart wave reuses the
+    * classes its first wave compiled instead of compiling them again
+    * under a new executor classloader. */
   private val confLock = new Object
   private var confDepth = 0
   private var confPrev: Map[String, Option[String]] = Map.empty

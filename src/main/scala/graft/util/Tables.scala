@@ -24,7 +24,13 @@ object Tables {
     * so every regen grew the map). Sessions are WEAK keys, the same
     * lifetime discipline as util.Memo: a stopped, dereferenced session's
     * plans are collectable instead of pinned for the JVM's life.
-    * `Graft.freeCaches` also clears the calling session's slice. */
+    * `Graft.freeCaches` also clears the calling session's slice.
+    *
+    * `sessionSlice` is also the seam every engine session passes first:
+    * every operator, `Graft.sizeShufflePartitions` and
+    * `Graft.registerViews` read their tables here before they run a
+    * query, so a session's first slice is where it is moved onto the
+    * executor's shared classloader (`Graft.shareExecutorLoader`). */
   private val scanCache =
     new java.util.WeakHashMap[SparkSession,
       scala.collection.concurrent.TrieMap[String, (String, DataFrame)]]
@@ -39,6 +45,7 @@ object Tables {
   private def sessionSlice(spark: SparkSession) = scanCache.synchronized {
     var m = scanCache.get(spark)
     if (m == null) {
+      graft.Graft.shareExecutorLoader(spark)
       m = scala.collection.concurrent.TrieMap.empty[String, (String, DataFrame)]
       scanCache.put(spark, m)
     }

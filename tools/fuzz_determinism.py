@@ -33,7 +33,11 @@ DEFAULT_QS = ["agg_stats", "agg_moments", "win_topk_group",
               # term-bag text stats: k-weighted integer sums, bag folds
               "text_entropy", "text_stopword_discovery", "text_zipf_slope",
               "text_hapax_ratio", "text_rarity_score",
-              "text_unigram_lm_score"]
+              "text_unigram_lm_score",
+              # two-wave streams: the restart wave reuses the classes the
+              # first wave compiled in the shared executor classloader
+              "stream_restart_parity", "stream_late_drop_parity",
+              "stream_dedup_parity", "stream_dropdup_within_watermark"]
 
 ADD_OPENS = " ".join(
     f"--add-opens java.base/{p}=ALL-UNNAMED" for p in
